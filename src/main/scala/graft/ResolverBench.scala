@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Large-scale rehearsal of the in-stream delta resolver (megamind's
@@ -39,14 +38,7 @@ object ResolverBench {
       if (p % 3 == 0) p - 1 else p
     }
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cores)
 
     val base = Files.createTempDirectory("graft-resolver-bench").toString
     val inDir = s"$base/in"
@@ -136,10 +128,7 @@ object ResolverBench {
     val q = graft.streaming.StreamingIngest.start(spark, inDir, outDir,
       s"$base/ck", graft.kg.Pipeline.emptyDict(spark),
       graft.kg.Link.Config(fuzzy = false),
-      resolveEvery = 1, resolveCfg = resolveCfg, maxFilesPerTrigger = Some(1),
-      // SPARK_GRAFT_SIGIDX=1 backs discovery with the persisted
-      // band-signature index (per-trigger banding CPU O(delta))
-      resolveSigIndex = sys.env.get("SPARK_GRAFT_SIGIDX").contains("1"))
+      resolveEvery = 1, resolveCfg = resolveCfg, maxFilesPerTrigger = Some(1))
     q.awaitTermination(3600000)
     q.exception.foreach { e =>
       System.err.println(s"[resolver-bench] STREAM FAILED: ${e.getMessage}")
@@ -174,8 +163,7 @@ object ResolverBench {
           s"${kv.getOrElse("discover_ms", -1L)} | " +
           s"${kv.getOrElse("rewrite_ms", -1L)} | " +
           s"${kv.getOrElse("watermark_ms", -1L)} | " +
-          s"${kv.getOrElse("elapsed_ms", -1L)}" +
-          kv.get("sig_banded_keys").map(n => s" | banded=$n").getOrElse(""))
+          s"${kv.getOrElse("elapsed_ms", -1L)}")
       }
     }
 

@@ -253,7 +253,6 @@ object Incremental {
   private def resolveDir(outDir: String) = s"$outDir/_resolve"
   private def resolvedKeysTable(outDir: String) = s"${resolveDir(outDir)}/resolved_keys"
   private def resolveCfgPath(outDir: String) = Paths.get(resolveDir(outDir), "_CONFIG")
-  private def sigIndexDir(outDir: String) = s"${resolveDir(outDir)}/sig_index"
 
   /** The Config fields that determine the same-as pair set — a change in any
     * invalidates the converged-old-keys invariant and forces a full
@@ -292,11 +291,7 @@ object Incremental {
 
   def resolveDisjoint(spark: SparkSession, outDir: String,
       cfg: Link.Config = Link.Config(),
-      fullRediscovery: Boolean = false,
-      /** back LSH discovery with the persisted band-signature index
-        * ([[SigIndex]]) — per-pass banding CPU drops from O(total) to
-        * O(delta); identical output. Ignored on the exact-PPJoin path. */
-      sigIndex: Boolean = false): ResolveStats = {
+      fullRediscovery: Boolean = false): ResolveStats = {
     val nodesOpt = Materialize.readTable(spark, s"$outDir/nodes")
     val edgesOpt = Materialize.readTable(spark, s"$outDir/edges")
     if (nodesOpt.isEmpty || edgesOpt.isEmpty) return ResolveStats(0L, 0L, 0L)
@@ -346,14 +341,7 @@ object Incremental {
       return ResolveStats(0L, total, 0L)
     }
 
-    val useIdx = sigIndex && !cfg.exactSameAs
-    val (sameAs, freeDiscovery, idxStats) =
-      if (useIdx) SigIndex.fuzzySameAsIndexed(spark, sigIndexDir(outDir),
-        flagged, cfg, rebuild = oldKeys.isEmpty)
-      else {
-        val (sa, free) = Link.fuzzySameAsManaged(flagged, cfg, delta = true)
-        (sa, free, SigIndex.Stats(-1L, rebuilt = false))
-      }
+    val (sameAs, freeDiscovery) = Link.fuzzySameAsManaged(flagged, cfg, delta = true)
     val cc = Canonicalize.connectedComponents(
         sameAs.select(col("entity_type"), col("key_a"), col("key_b")))
       .select(col("entity_type").as("cc_et"), col("key").as("cc_key"),
@@ -365,7 +353,6 @@ object Incremental {
       .filter(col("name") =!= col("component"))
       .select(col("guid").as("old_guid"),
         Link.guidFor(col("entity_type"), col("component")).as("new_guid"),
-        col("entity_type").as("rw_et"), col("name").as("old_name"),
         col("component").as("new_name"))
       .localCheckpoint(eager = true)
     val nRewrites = rewrite.count()
@@ -421,12 +408,6 @@ object Incremental {
         })
       if (affectedEdges != null) affectedEdges.unpersist()
       if (affectedNodes != null) affectedNodes.unpersist()
-      // merged-away names leave the node table; they must leave the
-      // signature index too (a stale signature row would keep discovering
-      // pairs against a dead key, resurrecting it as a same-as edge)
-      if (useIdx) SigIndex.remove(spark, sigIndexDir(outDir),
-        rewrite.select(col("rw_et").as("entity_type"),
-          col("old_name").as("dict_key")).distinct(), cfg)
     }
     val tRewrite = System.currentTimeMillis()
 
@@ -465,11 +446,7 @@ object Incremental {
     appendMetrics(spark, outDir, Seq(
       ("resolve", "resolve", -1, "touched_entities", touched),
       ("resolve", "resolve", -1, "total_entities", total),
-      ("resolve", "resolve", -1, "rewritten_entities", nRewrites)) ++
-      (if (useIdx) Seq(
-        ("resolve", "resolve", -1, "sig_banded_keys", idxStats.bandedKeys),
-        ("resolve", "resolve", -1, "sig_rebuilt", if (idxStats.rebuilt) 1L else 0L))
-       else Seq.empty) ++ Seq(
+      ("resolve", "resolve", -1, "rewritten_entities", nRewrites),
       ("resolve", "resolve", -1, "scan_ms", tScan - t0),
       ("resolve", "resolve", -1, "discover_ms", tDiscover - tScan),
       ("resolve", "resolve", -1, "rewrite_ms", tRewrite - tDiscover),

@@ -109,9 +109,11 @@ object Link {
     if (s.length < 3) Set(s) else s.sliding(3).toSet
 
   /** [[shingles]] packed injectively into longs, SORTED DISTINCT: a
-    * trigram's 3 UTF-16 code units occupy 48 bits (c0<<32 | c1<<16 | c2);
-    * a key shorter than 3 chars packs whole into < 2^32, disjoint from any
-    * trigram's >= 2^32 (normalized keys never contain NUL, so c0 > 0).
+    * trigram's 3 UTF-16 code units occupy 48 bits (c0<<32 | c1<<16 | c2,
+    * always < 2^48); a key shorter than 3 chars packs whole as
+    * 1<<48 | length<<32 | code units — the tag bit keeps it disjoint from
+    * every trigram (the trigram NUL,'a','b' would otherwise equal the key
+    * "ab"), the length from every other short key ("a" vs NUL,'a').
     * Injective ⇒ the distinct COUNT equals `shingles(s).size` and set
     * intersections map 1:1 — jaccard over packed arrays is the identical
     * integer ratio (and so the identical IEEE double) as over the string
@@ -123,7 +125,7 @@ object Link {
     if (n <= 0) {
       var v = 0L; var i = 0
       while (i < s.length) { v = (v << 16) | s.charAt(i).toLong; i += 1 }
-      Array(v)
+      Array((1L << 48) | (s.length.toLong << 32) | v)
     } else {
       val out = new Array[Long](n)
       var i = 0

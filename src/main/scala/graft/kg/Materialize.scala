@@ -295,7 +295,7 @@ object Materialize {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private[kg] def deleteDirRecursive(p: Path): Unit =
+  private[graft] def deleteDirRecursive(p: Path): Unit =
     if (Files.exists(p)) {
       val st = Files.walk(p)
       try st.sorted(java.util.Comparator.reverseOrder())

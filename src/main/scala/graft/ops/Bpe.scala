@@ -82,27 +82,16 @@ object Bpe {
     * the driver loop does the same arithmetic in seconds-to-minutes and
     * integer pair counts make the two loops EXACTLY equal, asserted in
     * BpeSpec at nMerges=5000). Above the gate the distributed loop below
-    * is authoritative, optionally over a `heavyHitterTopK`-truncated
-    * vocabulary (top-K words by (cnt desc, word asc) — the standard
-    * practice for web-scale corpora, where the frequency tail beyond the
-    * top few million words carries <0.1% of token mass; 0 = exact).
-    * Symbols are UTF-16 code units and the tie-break order is
-    * String.compareTo — identical to the distributed path on the repo's
-    * ASCII corpora convention. */
+    * is authoritative. Symbols are UTF-16 code units and the tie-break
+    * order is String.compareTo — identical to the distributed path on the
+    * repo's ASCII corpora convention. */
   def learnMerges(docs: DataFrame, nMerges: Int,
       textCol: String = "text",
-      maxDriverVocab: Long = 2000000L,
-      heavyHitterTopK: Int = 0): Seq[(Int, String, String)] = {
+      maxDriverVocab: Long = 2000000L): Seq[(Int, String, String)] = {
     require(nMerges > 0, s"learnMerges needs nMerges > 0: $nMerges")
     val spark = docs.sparkSession
     import spark.implicits._
-    val wordsBase = {
-      val all = toWords(docs, textCol)
-      if (heavyHitterTopK > 0)
-        all.orderBy(col("cnt").desc, col("word")).limit(heavyHitterTopK)
-      else all
-    }
-    val wordsCp = wordsBase.localCheckpoint(true)
+    val wordsCp = toWords(docs, textCol).localCheckpoint(true)
     val nVocab = wordsCp.count()
     if (nVocab <= maxDriverVocab) {
       val vocab = wordsCp.as[(String, Long)].collect()

@@ -12,8 +12,12 @@ import org.apache.spark.sql.functions._
   *
   * Guarantee: for any two input records with set-Jaccard >= t, the pair
   * appears in the candidate output — recall 1.0 by construction (every
-  * filter below is a NECESSARY condition for J >= t). Precision is the
-  * caller's job: verify candidates with exact Jaccard.
+  * filter below is a NECESSARY condition for J >= t) for LONG tokens, e.g.
+  * Link's packed shingles. STRING tokens are keyed by 64-bit xxhash, so
+  * recall is 1.0 except when two distinct tokens that co-occur in one
+  * record collide in xxhash64 (P < 2^-40 at any real vocabulary; see
+  * [[buildCandidates]]). Precision is the caller's job: verify candidates
+  * with exact Jaccard.
   *
   * Filters, in plan order (all keyed shuffles, never all-pairs):
   *

@@ -33,6 +33,18 @@ class LinkSpec extends AnyFunSuite {
     assert(Link.jaccard("alice smith", "bob jones") < 0.1)
   }
 
+  test("shinglesPacked: a short key never packs like a NUL-led trigram") {
+    val short = Link.shinglesPacked("ab")
+    val nulLed = Link.shinglesPacked("\u0000ab")
+    assert(short.toSet.intersect(nulLed.toSet).isEmpty)
+    assert(Link.shinglesPacked("a").toSet.intersect(
+      Link.shinglesPacked("\u0000a").toSet).isEmpty)
+    assert(Link.jaccardPackedKernel(short, nulLed) == Link.jaccard("ab", "\u0000ab"))
+    import spark.implicits._
+    val keys = Seq(("Person", "ab"), ("Person", "\u0000ab")).toDF("entity_type", "dict_key")
+    assert(Link.fuzzySameAs(keys, Link.Config(exactSameAs = true)).count() == 0)
+  }
+
   test("bandSignature is deterministic and has `bands` entries") {
     val a = Link.bandSignature("alice smith", 24, 8)
     val b = Link.bandSignature("alice smith", 24, 8)
