@@ -52,16 +52,15 @@ object KgBench {
     // cache — constant memory footprint at any corpus size (the fix for the
     // per-core throughput degradation past ~20M cached turns)
     val staging = sys.env.get("SPARK_GRAFT_STAGE").contains("1")
-    val stageBase = s"/tmp/graft_stage_$nConvs"
+    // per-run staging dir, deleted at exit: concurrent runs never share (or
+    // recursively delete) each other's staging tables
+    val stageDir = Files.createTempDirectory(s"graft-kgbench-stage-$nConvs-")
     def wipeStage(): Unit = if (staging) {
-      val d = Paths.get(stageBase)
-      if (Files.exists(d))
-        Files.walk(d).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { Files.delete(f); () })
-      Files.createDirectories(d)
+      graft.kg.Materialize.deleteDirRecursive(stageDir)
+      Files.createDirectories(stageDir)
       ()
     }
-    if (staging) { wipeStage(); sys.props("graft.stage.dir") = stageBase }
+    if (staging) sys.props("graft.stage.dir") = stageDir.toString
 
     def timed(cores: Int): (Double, Long) = {
       val s = session(cores)
@@ -82,8 +81,9 @@ object KgBench {
       (best, triples)
     }
 
-    val (loSecs, loTriples) = timed(loCores)
-    val (hiSecs, hiTriples) = timed(hiCores)
+    val ((loSecs, loTriples), (hiSecs, hiTriples)) =
+      try (timed(loCores), timed(hiCores))
+      finally graft.kg.Materialize.deleteDirRecursive(stageDir)
     require(loTriples == hiTriples, s"parallelism changed results: $loTriples vs $hiTriples")
 
     val tpsLo = loTriples / loSecs
@@ -123,11 +123,12 @@ object KgBench {
       org.apache.spark.sql.functions.hash($"conv_id"), org.apache.spark.sql.functions.lit(50)) === 0)
     else all).as[graft.model.Model.Turn]
     val result = Pipeline.run(turns, Pipeline.syntheticDict(spark))
-    val out = Files.createTempDirectory("graft-kgbench").toString
-    val merged = graft.kg.Materialize.mergeSnapshot(spark, s"$out/edges", result.edges,
-      graft.kg.Materialize.edgeKey)
-    val n = merged.count()
-    result.close()
-    n
+    val out = Files.createTempDirectory("graft-kgbench")
+    try graft.kg.Materialize.mergeSnapshot(spark, s"$out/edges", result.edges,
+      graft.kg.Materialize.edgeKey).count()
+    finally {
+      result.close()
+      graft.kg.Materialize.deleteDirRecursive(out)
+    }
   }
 }

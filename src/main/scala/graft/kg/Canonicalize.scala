@@ -63,10 +63,10 @@ object Canonicalize {
     // Materialize the (small) same-as edge set once, then decide strategy
     // from its measured size. (A limit+collect probe would re-run the whole
     // upstream similarity join once per CollectLimit scale-up round —
-    // measured 8x slower than checkpoint+count.)
-    val cp = edges.localCheckpoint(eager = true)
-    val sized = cp.agg(count(lit(1)),
-      sum(length(col("entity_type")) + length(col("src")) + length(col("dst")))).head()
+    // measured 8x slower than checkpoint+count.) The size rides the
+    // checkpoint job as observed metrics — no second scan.
+    val (cp, sized) = graft.ops.CapMetrics.checkpointSized(edges, count(lit(1)),
+      sum(length(col("entity_type")) + length(col("src")) + length(col("dst"))))
     val n = sized.getLong(0)
     val bytes = if (sized.isNullAt(1)) 0L else sized.getLong(1)
     val out =

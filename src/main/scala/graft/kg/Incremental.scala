@@ -308,24 +308,36 @@ object Incremental {
       if (fullRediscovery || !sigMatches) None
       else Materialize.readTable(spark, resolvedKeysTable(outDir))
 
+    // Every derivation below (rewrite map, node rewrite, watermark) rests
+    // on the node invariant guid == guidFor(entity_type, name): one node
+    // row per eligible (entity_type, name), whose guid follows from the key.
+    // The scan checks it in the same job that checkpoints and sizes
+    // `flagged` (a violating key survives the distinct as its own row).
     val eligibleAll = nodes.filter(col("entity_type").isin(cfg.fuzzyTypes: _*))
-      .select(col("entity_type"), col("name").as("dict_key")).distinct()
-    val flagged = (oldKeys match {
+      .select(col("entity_type"), col("name").as("dict_key"),
+        (col("guid") =!= Link.guidFor(col("entity_type"), col("name"))).as("_bad"))
+      .distinct()
+    val (flagged, counts) = graft.ops.CapMetrics.checkpointSized(oldKeys match {
       case Some(old) =>
         val marker = old.select(col("entity_type"), col("dict_key"),
           lit(1).as("_seen"))
         eligibleAll.join(marker, Seq("entity_type", "dict_key"), "left")
           .select(col("entity_type"), col("dict_key"),
-            col("_seen").isNull.as("is_new"))
+            col("_seen").isNull.as("is_new"), col("_bad"))
       case None =>
         eligibleAll.select(col("entity_type"), col("dict_key"),
-          lit(true).as("is_new"))
-    }).localCheckpoint(eager = true)
-
-    val counts = flagged.agg(count(lit(1)),
-      sum(when(col("is_new"), 1L).otherwise(0L))).head()
+          lit(true).as("is_new"), col("_bad"))
+    }, count(lit(1)), sum(when(col("is_new"), 1L).otherwise(0L)),
+      sum(when(col("_bad"), 1L).otherwise(0L)))
     val total = counts.getLong(0)
     val touched = if (counts.isNullAt(1)) 0L else counts.getLong(1)
+    val bad = if (counts.isNullAt(2)) 0L else counts.getLong(2)
+    if (bad > 0L) {
+      flagged.unpersist()
+      throw new IllegalStateException(s"resolver: $bad eligible node key(s) in " +
+        s"$outDir/nodes carry a guid other than guidFor(entity_type, name); " +
+        "the rewrite and watermark derivations would be wrong, refusing to resolve")
+    }
     // phase boundary timestamps → per-phase _metrics rows: the flat-vs-
     // growing decomposition (O(delta) discovery vs O(total) merge-on-read
     // scan) must be readable from the artifact, not re-derived by hand
@@ -347,15 +359,18 @@ object Incremental {
       .select(col("entity_type").as("cc_et"), col("key").as("cc_key"),
         col("component"))
 
-    // guid rewrite map: old guid -> canonical guid (only where it changes)
-    val rewrite = nodes.join(cc,
-        nodes("entity_type") === cc("cc_et") && nodes("name") === cc("cc_key"))
-      .filter(col("name") =!= col("component"))
-      .select(col("guid").as("old_guid"),
-        Link.guidFor(col("entity_type"), col("component")).as("new_guid"),
-        col("component").as("new_name"))
-      .localCheckpoint(eager = true)
-    val nRewrites = rewrite.count()
+    // guid rewrite map, derived from `cc` alone: every cc key is a flagged
+    // node key, and by the invariant its node's guid is guidFor(type, key) —
+    // so no join against the node table (only keys that change are kept)
+    val (rewrite, rwCounts) = graft.ops.CapMetrics.checkpointSized(
+      cc.filter(col("cc_key") =!= col("component"))
+        .select(
+          Link.guidFor(col("cc_et"), col("cc_key")).as("old_guid"),
+          Link.guidFor(col("cc_et"), col("component")).as("new_guid"),
+          col("cc_et").as("rw_et"), col("cc_key").as("old_name"),
+          col("component").as("new_name")),
+      count(lit(1)))
+    val nRewrites = rwCounts.getLong(0)
     val tDiscover = System.currentTimeMillis()
     // rewrite is materialized — free the discovery's internal checkpoints
     // so a resolver LOOP (per-micro-batch resolveEvery) stays O(1) in
@@ -363,22 +378,21 @@ object Incremental {
     freeDiscovery()
 
     if (nRewrites > 0L) {
-      // size-gated broadcast (rewrite is checkpointed, count already done):
-      // an explicit hint is never demoted by AQE, so only hint when measured
+      // size-gated broadcast (rewrite is checkpointed and sized): an
+      // explicit hint is never demoted by AQE, so only hint when measured
       // small; above the gate the planner/AQE pick the join side
       val hintBc = nRewrites <= cfg.maxBroadcastRegistryRows
       def bc(df: DataFrame): DataFrame = if (hintBc) broadcast(df) else df
 
       // AFFECTED edge rows only: delete the pre-rewrite rows, insert the
       // rewritten ones — O(affected) written, not O(table). Edges and nodes
-      // are independent tables: their rewrite scans + appendRewrites run as
-      // concurrent driver-submitted jobs (the per-bucket appendDelta shape)
+      // are independent tables: their rewrites run as concurrent
+      // driver-submitted jobs (the per-bucket appendDelta shape)
       val rwSubj = bc(rewrite.select(col("old_guid").as("s_old"), col("new_guid").as("s_new")))
       val rwObj = bc(rewrite.select(col("old_guid").as("o_old"), col("new_guid").as("o_new")))
       val edgeCols = Seq("subj_type", "subj_guid", "pred", "obj_kind", "obj_type",
         "obj_guid", "obj_string", "obj_int64", "obj_float64")
       var affectedEdges: DataFrame = null
-      var affectedNodes: DataFrame = null
       Materialize.awaitBoth(
         () => {
           affectedEdges = edges
@@ -395,42 +409,40 @@ object Incremental {
           Materialize.appendRewrite(spark, s"$outDir/edges", edgeUpserts,
             affectedEdges.select(edgeCols.map(col): _*), Materialize.edgeKey)
         },
-        () => {
-          affectedNodes = nodes
-            .join(bc(rewrite.select(col("old_guid"), col("new_guid"), col("new_name"))),
-              col("guid") === col("old_guid"))
-            .localCheckpoint(eager = true)
-          val nodeUpserts = affectedNodes.select(col("new_guid").as("guid"),
-            col("entity_type"), col("new_name").as("name"))
-          Materialize.appendRewrite(spark, s"$outDir/nodes", nodeUpserts,
-            affectedNodes.select(col("guid"), col("entity_type")),
-            Seq("guid", "entity_type"))
-        })
+        // the node rewrite IS the map: by the invariant each rewritten key
+        // is exactly one node row (old_guid, rw_et), replaced by its
+        // component's row (new_guid, rw_et, new_name)
+        () => Materialize.appendRewrite(spark, s"$outDir/nodes",
+          rewrite.select(col("new_guid").as("guid"), col("rw_et").as("entity_type"),
+            col("new_name").as("name")),
+          rewrite.select(col("old_guid").as("guid"), col("rw_et").as("entity_type")),
+          Seq("guid", "entity_type")))
       if (affectedEdges != null) affectedEdges.unpersist()
-      if (affectedNodes != null) affectedNodes.unpersist()
     }
     val tRewrite = System.currentTimeMillis()
 
-    // record the new watermark: post-rewrite eligible key set + config sig
-    // (read fresh so merged-away names are gone and component reps present).
-    // Removing merged-away names is LOAD-BEARING: a name resolved away in
-    // pass k can reappear in pass k+2 — it must count as NEW again so its
-    // merge is rediscovered; a stale "seen" row would silently skip it.
+    // record the new watermark: post-rewrite eligible key set + config sig.
+    // Derived, not re-read: the rewrite deleted exactly the (rw_et,
+    // old_name) keys and inserted component keys that are already flagged,
+    // so the post-rewrite eligible set is `flagged` minus the merged-away
+    // names (invariant above). Removing merged-away names is LOAD-BEARING:
+    // a name resolved away in pass k can reappear in pass k+2 — it must
+    // count as NEW again so its merge is rediscovered; a stale "seen" row
+    // would silently skip it.
     //
     // The UPDATE is delta-shaped (added keys as a delta, removed keys as an
     // equality-delete tombstone): the replace-snapshot form rewrote the
     // ENTIRE key set every pass — measured 1.8M key rows written per
     // trigger at the 10M-turn rehearsal, an O(total) write that would
     // dominate per-trigger cost at corpus scale. Computing added/removed is
-    // two anti-joins (linear COMPUTE is unavoidable — the node table must
-    // be scanned anyway); the WRITE is O(changed). Full snapshot only on
-    // the first resolve or a config change (watermark rebuilt from
-    // scratch).
+    // two anti-joins (linear COMPUTE over checkpointed frames); the WRITE
+    // is O(changed). Full snapshot only on the first resolve or a config
+    // change (watermark rebuilt from scratch).
     Files.createDirectories(Paths.get(resolveDir(outDir)))
-    val after = Materialize.readTable(spark, s"$outDir/nodes").get
-      .filter(col("entity_type").isin(cfg.fuzzyTypes: _*))
-      .select(col("entity_type"), col("name").as("dict_key")).distinct()
     val wmKey = Seq("entity_type", "dict_key")
+    val after = flagged.select(wmKey.map(col): _*).join(
+      rewrite.select(col("rw_et").as("entity_type"), col("old_name").as("dict_key")),
+      wmKey, "left_anti")
     oldKeys match {
       case Some(old) =>
         val added = after.join(old.select(wmKey.map(col): _*), wmKey, "left_anti")

@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 import graft.model.Model._
 
@@ -43,6 +44,10 @@ import graft.model.Model._
   * The visible state is one `_CURRENT` pointer file naming the base and the
   * live deltas (`snap-N;delta-a;delta-b`), flipped atomically (tmp +
   * ATOMIC_MOVE) — a crashed writer never corrupts the visible table.
+  * Beside it sit the rest of the on-disk contract, each written once the
+  * same way: `_KEY` (the natural key merge-on-read dedups on) and
+  * `_SCHEMA` (the column schema every dir is scanned with, so a read
+  * infers nothing; a write with other columns fails loudly).
   *
   * CONCURRENT WRITERS: dir ids (`snap-N`/`delta-M`/`tomb-K`) are RESERVED
   * with a create-exclusive `Files.createDirectory` (retry upward on
@@ -145,12 +150,21 @@ object Materialize {
     * tombstones keep the plain dropDuplicates path (rows in these tables are
     * fully determined by their natural key, so arbitrary-winner dedup is
     * exact). With tombstones the LAST operation per key by dir id wins —
-    * one hash aggregation, same shuffle shape as the dedup it replaces. */
+    * one hash aggregation, same shuffle shape as the dedup it replaces.
+    *
+    * Every dir scans with the pinned `_SCHEMA` (tombstones with its key
+    * projection), so building the frame starts no Spark job — a schema-less
+    * `spark.read.parquet` runs one footer-inference job per dir. A table
+    * written before `_SCHEMA` existed infers once, from its first manifest
+    * dir. */
   def readTable(spark: SparkSession, table: String): Option[DataFrame] =
     currentManifest(table).map { m =>
+      val schema = readSchema(table).getOrElse(
+        spark.read.parquet(Paths.get(table, m.allDirs.head).toString).schema)
+      def scan(d: String, s: StructType): DataFrame =
+        spark.read.schema(s).parquet(Paths.get(table, d).toString)
       if (m.tombs.isEmpty) {
-        val frames = m.dirs.map(d => spark.read.parquet(Paths.get(table, d).toString))
-        val all = frames.reduce(_ unionByName _)
+        val all = m.dirs.map(scan(_, schema)).reduce(_ unionByName _)
         // single-dir tables need no merge: a lone base is deduplicated by
         // construction, and a lone delta is key-distinct by the appendDelta
         // contract (dedupStaged or caller-guaranteed) — skipping the
@@ -161,9 +175,9 @@ object Materialize {
       } else {
         def dirId(n: String): Long = n.split("-").last.toLong
         val key = readKey(table)
-        val ins = m.dirs.map(d => spark.read.parquet(Paths.get(table, d).toString)
+        val ins = m.dirs.map(d => scan(d, schema)
           .withColumn("_dir_id", lit(dirId(d))).withColumn("_ins", lit(true)))
-        val del = m.tombs.map(d => spark.read.parquet(Paths.get(table, d).toString)
+        val del = m.tombs.map(d => scan(d, keySchema(schema, key))
           .withColumn("_dir_id", lit(dirId(d))).withColumn("_ins", lit(false)))
         val all = (ins ++ del).reduce(_.unionByName(_, allowMissingColumns = true))
         val nonKey = all.columns.toSeq
@@ -177,15 +191,65 @@ object Materialize {
       }
     }
 
-  // the natural key is part of the table's on-disk contract: written once,
-  // read by merge-on-read (a reader cannot know it otherwise)
+  // The natural key (`_KEY`) and the column schema (`_SCHEMA`, StructType
+  // JSON, every field nullable) are the table's on-disk contract: a reader
+  // cannot know the key otherwise, and the pinned schema spares every scan
+  // the footer-inference job. Both are written on the first write as tmp +
+  // ATOMIC_MOVE (like `flip`), so a concurrent reader never sees a partial
+  // file. A later write whose columns differ from the pin fails loudly;
+  // `mergeSnapshot(replace = true)` re-pins.
   private def keyPath(table: String): Path = Paths.get(table, "_KEY")
-  private def writeKey(table: String, key: Seq[String]): Unit = {
-    val p = keyPath(table)
-    if (!Files.exists(p)) Files.writeString(p, key.mkString("\n"))
+  private def schemaPath(table: String): Path = Paths.get(table, "_SCHEMA")
+
+  private def writeAtomic(p: Path, content: String): Unit = {
+    val tmp = Files.createTempFile(p.getParent, s".${p.getFileName}", ".tmp")
+    Files.writeString(tmp, content)
+    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
+      StandardCopyOption.REPLACE_EXISTING)
   }
+
+  private def writeKey(table: String, key: Seq[String]): Unit =
+    if (!Files.exists(keyPath(table))) writeAtomic(keyPath(table), key.mkString("\n"))
   private def readKey(table: String): Seq[String] =
     Files.readString(keyPath(table)).split("\n").filter(_.nonEmpty).toSeq
+
+  private def readSchema(table: String): Option[StructType] =
+    Option.when(Files.exists(schemaPath(table)))(
+      DataType.fromJson(Files.readString(schemaPath(table))).asInstanceOf[StructType])
+
+  private def keySchema(schema: StructType, key: Seq[String]): StructType =
+    StructType(key.map(schema(_)))
+
+  /** Pin `schema` as the table's `_SCHEMA` when none is pinned (or when
+    * `replace`), else require the write's columns to equal the pin by name
+    * and type (order-free: every read is by name). Returns the pin. */
+  private def pinSchema(table: String, schema: StructType,
+      replace: Boolean = false): StructType = {
+    val s = nullable(schema)
+    readSchema(table) match {
+      case Some(pinned) if sameColumns(pinned, s) => pinned
+      case Some(pinned) if !replace =>
+        throw new IllegalArgumentException(s"table $table: write columns " +
+          s"${s.simpleString} differ from the pinned ${pinned.simpleString} " +
+          s"(${schemaPath(table)})")
+      case _ => writeAtomic(schemaPath(table), s.json); s
+    }
+  }
+
+  // parquet reads every field back nullable; pin and compare in that form
+  private def nullable(s: StructType): StructType = {
+    def n(t: DataType): DataType = t match {
+      case st: StructType => nullable(st)
+      case a: ArrayType => ArrayType(n(a.elementType), containsNull = true)
+      case m: MapType => MapType(n(m.keyType), n(m.valueType), valueContainsNull = true)
+      case other => other
+    }
+    StructType(s.fields.map(f => f.copy(dataType = n(f.dataType), nullable = true)))
+  }
+
+  private def sameColumns(a: StructType, b: StructType): Boolean =
+    a.fields.map(f => f.name -> f.dataType).toMap ==
+      b.fields.map(f => f.name -> f.dataType).toMap
 
   // Files.list streams must be closed (fd leak in a long-lived driver)
   private def listTableDirs(table: String): Seq[String] = {
@@ -205,27 +269,36 @@ object Materialize {
     if (s.isEmpty) 0L else s.max + 1
   }
 
-  /** Reserve the next `kind-N` dir CREATE-EXCLUSIVELY: `createDirectory`
-    * throws if the dir exists, so two writers listing the same max id can
-    * never both claim `kind-N` — the loser retries upward. (Plain
-    * list-and-increment let two processes mint the same id and silently
-    * clobber each other's parquet files.)
+  /** Reserve the next `kind-N` dir CREATE-EXCLUSIVELY: two writers
+    * listing the same max id can never both claim `kind-N` — the loser
+    * retries upward. (Plain list-and-increment let two processes mint the
+    * same id and silently clobber each other's parquet files.)
     *
-    * A sibling `.pending-<dir>` marker protects the reservation from a
-    * concurrent [[gc]] until the writer flips it into the manifest and
-    * [[commitReserved]] removes the marker (the marker sits OUTSIDE the dir
-    * because Spark's Overwrite write clears the dir's contents). A crashed
-    * writer's marker goes stale and stops protecting after
-    * [[PendingStaleMs]] — gc then reclaims both. */
+    * The claim token is a sibling `.pending-<dir>` marker, created
+    * exclusively BEFORE the dir: Spark's Overwrite write deletes and
+    * recreates the reserved dir, so while a write is in flight the dir
+    * itself may be briefly absent and only the marker shows the id is
+    * taken (a dir-only claim let a second writer reserve the same id in
+    * that window and delete the first writer's `_temporary` files). The
+    * marker also protects the reservation from a concurrent [[gc]] until
+    * the writer flips it into the manifest and [[commitReserved]] removes
+    * it (it sits OUTSIDE the dir because the Overwrite write clears the
+    * dir's contents). A crashed writer's marker goes stale and stops
+    * protecting after [[PendingStaleMs]] — gc then reclaims both. */
   private def reserveDir(table: String, kind: String): String = {
     Files.createDirectories(Paths.get(table))
     var id = nextId(table)
     var made: String = null
     while (made == null) {
-      try { Files.createDirectory(Paths.get(table, s"$kind-$id")); made = s"$kind-$id" }
-      catch { case _: java.nio.file.FileAlreadyExistsException => id += 1 }
+      val name = s"$kind-$id"
+      try {
+        Files.createFile(pendingMarker(table, name))
+        // an existing dir without a marker is committed (or abandoned): skip
+        try { Files.createDirectory(Paths.get(table, name)); made = name }
+        catch { case e: java.nio.file.FileAlreadyExistsException =>
+          Files.delete(pendingMarker(table, name)); throw e }
+      } catch { case _: java.nio.file.FileAlreadyExistsException => id += 1 }
     }
-    Files.writeString(pendingMarker(table, made), "")
     made
   }
 
@@ -330,14 +403,16 @@ object Materialize {
     * rewrite (new base snapshot, deltas folded in and cleared) — use
     * [[appendDelta]] for per-batch increments and let compaction amortize
     * the rewrites. With `replace = true` the staged frame REPLACES the
-    * table. Old snapshots beyond `retainSnapshots` are GC'd. Returns the
-    * merged frame. */
+    * table (and re-pins its `_SCHEMA`). Old snapshots beyond
+    * `retainSnapshots` are GC'd. Returns the merged snapshot, read with the
+    * pinned schema. */
   def mergeSnapshot(spark: SparkSession, table: String, staged: DataFrame,
       key: Seq[String], replace: Boolean = false,
       retainSnapshots: Int = 2): DataFrame = withTableLock(table) {
     // whole-op critical section: the rewrite reads the live table, so a
     // concurrent append between read and flip would be silently folded out
     writeKey(table, key)
+    val schema = pinSchema(table, staged.schema, replace)
     val merged = readTable(spark, table) match {
       case Some(existing) if !replace =>
         existing.unionByName(staged).dropDuplicates(key)
@@ -348,7 +423,7 @@ object Materialize {
     flip(table, Manifest(Some(snapDir), Nil))
     commitReserved(table, snapDir)
     gc(table, retainSnapshots)
-    spark.read.parquet(Paths.get(table, snapDir).toString)
+    spark.read.schema(schema).parquet(Paths.get(table, snapDir).toString)
   }
 
   /** Append one batch as a delta: O(batch) bytes written, visible
@@ -361,6 +436,7 @@ object Materialize {
       retainSnapshots: Int = 2, dedupStaged: Boolean = true): Unit = {
     Files.createDirectories(Paths.get(table))
     writeKey(table, key)
+    pinSchema(table, staged.schema)
     val deltaDir = reserveDir(table, "delta")
     // dedupStaged = false skips the in-batch dedup shuffle when the caller
     // guarantees the staged frame is already key-distinct (pipeline outputs
@@ -392,6 +468,11 @@ object Materialize {
       retainSnapshots: Int = 2): Unit = {
     Files.createDirectories(Paths.get(table))
     writeKey(table, key)
+    val schema = pinSchema(table, upserts.schema)
+    val tomb = deleteKeys.select(key.map(col): _*)
+    require(sameColumns(keySchema(schema, key), nullable(tomb.schema)),
+      s"table $table: tombstone columns ${tomb.schema.simpleString} differ " +
+        s"from the pinned key columns ${keySchema(schema, key).simpleString}")
     // tomb reserved BEFORE delta: monotonic reservation keeps tomb id <
     // delta id, preserving the insert-wins resolution for keys in both.
     // The ids only need the RESERVATION ordered — the two data writes are
@@ -400,7 +481,7 @@ object Materialize {
     val tombDir = reserveDir(table, "tomb")
     val deltaDir = reserveDir(table, "delta")
     awaitBoth(
-      () => deleteKeys.select(key.map(col): _*).dropDuplicates(key)
+      () => tomb.dropDuplicates(key)
         .write.mode(SaveMode.Overwrite).parquet(Paths.get(table, tombDir).toString),
       () => upserts.dropDuplicates(key)
         .write.mode(SaveMode.Overwrite).parquet(Paths.get(table, deltaDir).toString))

@@ -111,20 +111,19 @@ object Pipeline {
   private def runLinked(raw: DataFrame, freeRaw: () => Unit, dict: DataFrame,
       linkCfg: Link.Config): Result = {
     val (regRaw, freeRegInternals) = Link.registryManaged(raw, dict, linkCfg)
-    val reg = regRaw.localCheckpoint(eager = true)
+    // size-gated broadcast hint: rows AND estimated raw bytes are observed
+    // by the registry's own checkpoint job (no second scan). Above either
+    // gate the labeling joins shuffle (AQE may still promote) instead of
+    // forcing an unbounded broadcast — the OOM-class failure mode at
+    // billions of distinct entities.
+    val (reg, regSized) = graft.ops.CapMetrics.checkpointSized(regRaw, count(lit(1)),
+      sum(length(col("entity_type")) + length(col("norm_key"))
+        + length(col("canonical_key")) + length(col("guid"))))
     // the registry is materialized: free the linking stage's internal
     // checkpoints NOW (mention set + same-as candidate/band frames) — a
     // per-bucket/per-micro-batch loop would otherwise retain one set per
     // pass for the process lifetime
     freeRegInternals()
-    // size-gated broadcast hint: the registry is already checkpointed, so
-    // counting rows AND estimating raw bytes is one cheap scan of cached
-    // blocks. Above either gate the labeling joins shuffle (AQE may still
-    // promote) instead of forcing an unbounded broadcast — the OOM-class
-    // failure mode at billions of distinct entities.
-    val regSized = reg.agg(count(lit(1)),
-      sum(length(col("entity_type")) + length(col("norm_key"))
-        + length(col("canonical_key")) + length(col("guid")))).head()
     val regRows = regSized.getLong(0)
     val regBytes = if (regSized.isNullAt(1)) 0L else regSized.getLong(1)
     val labeled = Link.label(raw, reg,

@@ -85,6 +85,22 @@ object CapMetrics {
     cp
   }
 
+  /** Eagerly localCheckpoint `df` and size it in the SAME job: the
+    * aggregates `cols` (e.g. `count(lit(1))`, summed string lengths) ride
+    * the checkpoint as an observation, so a size gate costs no second scan
+    * of the frame. Returns the checkpointed frame and the metrics row
+    * (column i = aggregate i; a sum over zero rows is null). Falls back to
+    * one `agg` over the checkpoint only when the observation is missing
+    * (the AQE empty-relation hazard above). */
+  def checkpointSized(df: DataFrame, cols: Column*): (DataFrame, Row) = {
+    val name = s"graft.size#${seq.incrementAndGet()}"
+    val observed = df.observe(name, cols.head, cols.tail: _*)
+    val cp = observed.localCheckpoint(eager = true)
+    val row = observed.queryExecution.observedMetrics.getOrElse(name,
+      cp.agg(cols.head, cols.tail: _*).head())
+    (cp, row)
+  }
+
   /** Latest harvested metrics for a site ("" map if never fired). Listener
     * delivery is async (listener-bus thread): poll with [[await]] in tests. */
   def latest(site: String): Map[String, Long] =

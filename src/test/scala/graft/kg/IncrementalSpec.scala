@@ -181,4 +181,102 @@ class IncrementalSpec extends AnyFunSuite {
     assert(gotEdges == refEdges)
     assert(personsAfter == refPersons)
   }
+
+  // -- the resolver's derived rewrite + watermark ----------------------------
+
+  private val aliasCfg = Link.Config(exactSameAs = true, jaccardThreshold = 0.8,
+    fuzzyTypes = Seq("Person"))
+
+  /** Digit-word person name: each digit d at position p is a 7-letter word
+    * over {'a'+p, 'f'+d}, so a name and its `" jr"` alias have trigram
+    * Jaccard above 0.9 while distinct names stay far below 0.8. */
+  private def personName(pid: Int): String =
+    (2 to 0 by -1).map { p =>
+      val x = ('a' + p).toChar
+      val y = ('f' + (pid / math.pow(10, p).toInt) % 10).toChar
+      s"$y$x$x$y$y$x$y"
+    }.mkString(" ")
+
+  /** Batch b of 3: base names of its own persons, plus `" jr"` aliases of
+    * the previous batch's persons and of the next batch's (both directions
+    * across the batch boundary). */
+  private def aliasBatch(b: Int): Seq[graft.model.Model.Turn] = {
+    val ts0 = new java.sql.Timestamp(0L)
+    def turn(c: String, i: Int, text: String) =
+      graft.model.Model.Turn(c, i, "user", text, "", ts0)
+    (0 until 4).flatMap { i =>
+      def mention(tag: String, pid: Int, alias: Boolean) = {
+        val n = personName(pid) + (if (alias) " jr" else "")
+        Seq(turn(s"b$b-$tag$i", 0, s"My name is $n."),
+          turn(s"b$b-$tag$i", 1, s"$n is ${20 + pid % 50} years old."))
+      }
+      mention("own", b * 10 + i, alias = false) ++
+        (if (b > 0) mention("prev", (b - 1) * 10 + i, alias = true) else Nil) ++
+        (if (b < 2) mention("next", (b + 1) * 10 + i, alias = true) else Nil)
+    }
+  }
+
+  test("resolver watermark equals the distinct eligible node keys after every pass") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-wm").toString
+    val dict = Pipeline.emptyDict(spark)
+    def keys(df: org.apache.spark.sql.DataFrame, name: String) =
+      df.select($"entity_type", org.apache.spark.sql.functions.col(name))
+        .distinct().collect().map(r => (r.getString(0), r.getString(1))).toSet
+    def checkWatermark(pass: String): Unit = {
+      val wm = keys(Materialize.readTable(spark, s"$out/_resolve/resolved_keys").get,
+        "dict_key")
+      val nodes = keys(Materialize.readTable(spark, s"$out/nodes").get
+        .filter($"entity_type".isin(aliasCfg.fuzzyTypes: _*)), "name")
+      assert(wm == nodes, s"after $pass")
+      assert(wm.nonEmpty, s"after $pass")
+    }
+    def ingestAndResolve(b: Int, runId: String): Incremental.ResolveStats = {
+      Incremental.run(aliasBatch(b).toDS(), dict, out, runId, nBuckets = 1,
+        linkCfg = Link.Config(fuzzy = false))
+      Incremental.resolveDisjoint(spark, out, aliasCfg)
+    }
+    val stats = (0 until 3).map { b =>
+      val st = ingestAndResolve(b, s"batch-$b")
+      checkWatermark(s"batch $b")
+      st
+    }
+    // batch 0 holds only its own base names and aliases of batch 1's
+    // persons; every later pass merges aliases into committed rows
+    assert(stats.head.rewritten == 0 && stats.tail.forall(_.rewritten > 0), s"$stats")
+    // re-delivered pre-rewrite batch: its aliases resurrect merged-away
+    // names, which must count as new again and re-merge
+    val again = ingestAndResolve(1, "batch-1-again")
+    checkWatermark("re-delivery of batch 1")
+    assert(again.rewritten > 0, s"re-delivered aliases re-merge: $again")
+    assert(Materialize.readTable(spark, s"$out/nodes").get
+      .filter($"entity_type" === "Person" && $"name".endsWith(" jr")).count() == 0)
+
+    // converged graph == one-shot build of the same turns + full resolve
+    val ref = Files.createTempDirectory("graft-wm-ref").toString
+    Incremental.run((0 until 3).flatMap(aliasBatch).toDS(), dict, ref, "all",
+      nBuckets = 1, linkCfg = Link.Config(fuzzy = false))
+    Incremental.resolveDisjoint(spark, ref, aliasCfg, fullRediscovery = true)
+    assert(edgeSet(Materialize.readTable(spark, s"$out/edges").get) ==
+      edgeSet(Materialize.readTable(spark, s"$ref/edges").get))
+    def nodeSet(t: String) = Materialize.readTable(spark, t).get
+      .select("guid", "entity_type", "name").collect()
+      .map(_.toSeq.mkString("|")).toSet
+    assert(nodeSet(s"$out/nodes") == nodeSet(s"$ref/nodes"))
+  }
+
+  test("a node whose guid is not guidFor(entity_type, name) makes the resolver throw") {
+    import spark.implicits._
+    val out = Files.createTempDirectory("graft-inv").toString
+    Incremental.run(aliasBatch(0).toDS(), Pipeline.emptyDict(spark), out, "r",
+      nBuckets = 1, linkCfg = Link.Config(fuzzy = false))
+    Materialize.appendDelta(spark, s"$out/nodes",
+      Seq(("0" * 64, "Person", personName(7))).toDF("guid", "entity_type", "name"),
+      Seq("guid", "entity_type"))
+    val ex = intercept[IllegalStateException] {
+      Incremental.resolveDisjoint(spark, out, aliasCfg)
+    }
+    assert(ex.getMessage.contains("guidFor"))
+    assert(!Files.exists(java.nio.file.Paths.get(out, "_resolve", "resolved_keys")))
+  }
 }

@@ -198,6 +198,19 @@ class MaterializeSpec extends AnyFunSuite {
     assert(got == (0 until 6).map(i => (s"c$i", i.toLong)).toSet)
   }
 
+  test("a dir id under an in-flight writer's marker is never reserved again") {
+    import spark.implicits._
+    val table = freshDir() + "/t"
+    Files.createDirectories(java.nio.file.Paths.get(table))
+    // a writer holds delta-0 inside Spark's Overwrite window: its marker
+    // exists while the dir is deleted and not yet recreated
+    Files.createFile(java.nio.file.Paths.get(table, ".pending-delta-0"))
+    Materialize.appendDelta(spark, table, Seq(("a", 1L)).toDF("k", "v"),
+      Seq("k"), compactEvery = 0)
+    assert(Materialize.currentManifest(table).get.deltas == Seq("delta-1"))
+    assert(!Files.exists(java.nio.file.Paths.get(table, "delta-0")))
+  }
+
   test("mixed appendDelta + mergeSnapshot keeps one consistent table") {
     import spark.implicits._
     val table = freshDir() + "/t"
@@ -207,5 +220,120 @@ class MaterializeSpec extends AnyFunSuite {
     val m = Materialize.currentManifest(table).get
     assert(m.deltas.isEmpty) // rewrite folded the delta in
     assert(Materialize.readTable(spark, table).get.count() == 2)
+  }
+
+  /** Spark jobs started on this thread while `f` runs. Jobs are tagged with
+    * a thread-local job group; a sentinel job in a second group drains the
+    * (asynchronous, FIFO) listener bus before counting. */
+  private def jobsDuring[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"probe-${System.nanoTime()}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsDuring")
+      val r = try f finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "jobsDuring sentinel")
+      try spark.range(1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10L)
+      assert(seen.contains(sentinel), "listener bus did not drain")
+      (r, seen.toArray.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** base + delta + tombstone: the shape the resolver leaves behind. */
+  private def mixedTable(): String = {
+    import spark.implicits._
+    val table = freshDir() + "/t"
+    Materialize.mergeSnapshot(spark, table,
+      Seq(("a", 1L), ("b", 2L), ("c", 3L)).toDF("k", "v"), Seq("k"))
+    Materialize.appendDelta(spark, table, Seq(("d", 4L)).toDF("k", "v"),
+      Seq("k"), compactEvery = 0)
+    Materialize.appendRewrite(spark, table, upserts = Seq(("b", 20L)).toDF("k", "v"),
+      deleteKeys = Seq("a", "b").toDF("k"), key = Seq("k"), compactEvery = 0)
+    table
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[(String, Long)] =
+    df.collect().map(r => (r.getAs[String]("k"), r.getAs[Long]("v"))).toSet
+
+  test("readTable over base + delta + tomb plans without starting a Spark job") {
+    val table = mixedTable()
+    val m = Materialize.currentManifest(table).get
+    assert(m.base.nonEmpty && m.deltas.size == 2 && m.tombs.size == 1)
+    val (df, jobs) = jobsDuring(Materialize.readTable(spark, table).get)
+    assert(jobs == 0, s"building the merge-on-read frame started $jobs job(s)")
+    assert(rows(df) == Set(("b", 20L), ("c", 3L), ("d", 4L)))
+  }
+
+  test("a table without _SCHEMA (pre-pin layout) reads the same rows") {
+    import spark.implicits._
+    val table = mixedTable()
+    val pinned = rows(Materialize.readTable(spark, table).get)
+    Files.delete(java.nio.file.Paths.get(table, "_SCHEMA"))
+    assert(rows(Materialize.readTable(spark, table).get) == pinned)
+    // the next write pins the schema again
+    Materialize.appendDelta(spark, table, Seq(("e", 5L)).toDF("k", "v"),
+      Seq("k"), compactEvery = 0)
+    assert(Files.exists(java.nio.file.Paths.get(table, "_SCHEMA")))
+    assert(rows(Materialize.readTable(spark, table).get) == pinned + (("e", 5L)))
+  }
+
+  test("a write whose columns differ from the pinned schema fails loudly; replace re-pins") {
+    import spark.implicits._
+    val table = freshDir() + "/t"
+    Materialize.appendDelta(spark, table, Seq(("a", 1L)).toDF("k", "v"),
+      Seq("k"), compactEvery = 0)
+    val wrongType = intercept[IllegalArgumentException] {
+      Materialize.appendDelta(spark, table, Seq(("b", "2")).toDF("k", "v"),
+        Seq("k"), compactEvery = 0)
+    }
+    assert(wrongType.getMessage.contains("_SCHEMA"))
+    intercept[IllegalArgumentException] {
+      Materialize.mergeSnapshot(spark, table, Seq(("b", 2L, 0)).toDF("k", "v", "x"), Seq("k"))
+    }
+    intercept[IllegalArgumentException] {
+      Materialize.appendRewrite(spark, table, Seq(("b", 2L)).toDF("k", "v"),
+        deleteKeys = Seq(1L).toDF("k"), key = Seq("k"), compactEvery = 0)
+    }
+    // nothing of the refused writes became visible
+    assert(rows(Materialize.readTable(spark, table).get) == Set(("a", 1L)))
+    // a column-order change is not a schema change (reads are by name)
+    Materialize.appendDelta(spark, table, Seq((3L, "c")).toDF("v", "k"),
+      Seq("k"), compactEvery = 0)
+    assert(rows(Materialize.readTable(spark, table).get) == Set(("a", 1L), ("c", 3L)))
+    // replace = true re-pins: the table now has the new columns
+    val replaced = Materialize.mergeSnapshot(spark, table,
+      Seq(("z", "new")).toDF("k", "w"), Seq("k"), replace = true)
+    assert(replaced.columns.toSeq == Seq("k", "w"))
+    assert(Materialize.readTable(spark, table).get.collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq == Seq(("z", "new")))
+  }
+
+  test("checkpointSized: the observed row equals a separate agg, also when empty") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val base = Seq(("a", "xy"), ("b", "z"), ("c", "")).toDF("k", "s")
+    def sizeCols = Seq(count(lit(1)), sum(length(col("k")) + length(col("s"))))
+    val frames = Seq(
+      "rows" -> base,
+      "empty" -> base.filter(lit(false)),
+      // AQE empty-relation propagation: the join's empty side is known at
+      // runtime only, so AQE may cancel the observed subtree's stage
+      "empty join side" -> base.join(base.filter(col("k") === "none").select(col("k"),
+        col("s").as("s2")), Seq("k")))
+    frames.foreach { case (what, df) =>
+      val (cp, row) = graft.ops.CapMetrics.checkpointSized(df, sizeCols: _*)
+      val direct = df.agg(sizeCols.head, sizeCols.tail: _*).head()
+      assert(row.toSeq == direct.toSeq, what)
+      assert(cp.count() == direct.getLong(0), what)
+    }
   }
 }
