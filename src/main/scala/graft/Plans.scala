@@ -59,7 +59,7 @@ object Plans {
       val reg = graft.kg.Link.registry(raw, graft.kg.Pipeline.emptyDict(spark),
         graft.kg.Link.Config(fuzzy = false))
       // hintBroadcast=true mirrors Pipeline.run's size gate outcome at this
-      // scale (registry count is far under maxBroadcastRegistryRows)
+      // scale (the registry is far within SizeGate.Registry)
       val edges = graft.kg.Materialize.edges(
         graft.kg.Link.label(raw, reg, hintBroadcast = true))
       audit("kg_label_edges", edges, execute = true)(

@@ -15,8 +15,8 @@ import org.apache.spark.sql.types._
   * strategies chosen by measured edge count (the same adaptive posture as
   * Spark's own broadcast-join threshold):
   *
-  *  - '''Small edge set''' (≤ `driverThreshold` rows): union-find on the
-  *    driver. Same-as edges are a similarity-join OUTPUT — pairs of distinct
+  *  - '''Small edge set''' (within [[graft.ops.SizeGate.Driver]]): union-find
+  *    on the driver. Same-as edges are a similarity-join OUTPUT — pairs of distinct
   *    entity keys judged equal — which is orders of magnitude smaller than
   *    the corpus; below the threshold the DataFrame loop's per-iteration job
   *    overhead dwarfs the work (measured: 12-34 s vs <1 s at bench scale).
@@ -42,38 +42,26 @@ object Canonicalize {
   /** Input: edge list (entity_type, key_a, key_b); undirected semantics.
     * Output: (entity_type, key, component).
     *
-    * Driver strategy is gated on BOTH row count and estimated bytes: the same
-    * agg pass that counts the checkpointed edge set sums its string lengths,
-    * and `collect()` happens only under `driverThreshold` rows AND
-    * `maxDriverStringBytes` of raw UTF-8 (Row/String/tuple-key object
-    * overhead on the driver is ~8x the raw bytes, so the 128 MB default caps
-    * driver heap use around a GB — same-as edges are a similarity-join
-    * OUTPUT, orders of magnitude smaller than the corpus, and the
-    * distributed star path's per-iteration driver scheduling overhead is a
-    * measured scaling-efficiency tax, so the driver path is preferred while
-    * it safely fits). */
-  def connectedComponents(sameAs: DataFrame, maxIter: Int = 25,
-      driverThreshold: Int = 2000000,
-      maxDriverStringBytes: Long = 128L * 1024 * 1024): DataFrame = {
+    * The driver strategy is gated on rows AND raw string bytes of the
+    * checkpointed edge set ([[graft.ops.SizeGate.Driver]]), measured by the
+    * checkpoint job itself. Same-as edges are a similarity-join OUTPUT,
+    * orders of magnitude smaller than the corpus, and the distributed star
+    * path's per-iteration driver scheduling is a measured scaling tax, so
+    * the driver path is preferred while it safely fits. (A limit+collect
+    * probe would re-run the whole upstream similarity join once per
+    * CollectLimit scale-up round — measured 8x slower than checkpoint +
+    * count.) */
+  def connectedComponents(sameAs: DataFrame, maxIter: Int = 25): DataFrame = {
     val spark = sameAs.sparkSession
     val fwd = sameAs.select(col("entity_type"), col("key_a").as("src"), col("key_b").as("dst"))
     val edges = fwd.unionByName(
       fwd.select(col("entity_type"), col("dst").as("src"), col("src").as("dst")))
       .distinct()
-    // Materialize the (small) same-as edge set once, then decide strategy
-    // from its measured size. (A limit+collect probe would re-run the whole
-    // upstream similarity join once per CollectLimit scale-up round —
-    // measured 8x slower than checkpoint+count.) The size rides the
-    // checkpoint job as observed metrics — no second scan.
-    val (cp, sized) = graft.ops.CapMetrics.checkpointSized(edges, count(lit(1)),
-      sum(length(col("entity_type")) + length(col("src")) + length(col("dst"))))
-    val n = sized.getLong(0)
-    val bytes = if (sized.isNullAt(1)) 0L else sized.getLong(1)
-    val out =
-      if (n <= driverThreshold && bytes <= maxDriverStringBytes)
-        driverUnionFind(spark, cp.collect())
-      else labelsByStar(cp, maxIter)
-    out
+    val gate = graft.ops.SizeGate.checkpoint("canonicalize", edges,
+      graft.ops.SizeGate.Driver,
+      length(col("entity_type")) + length(col("src")) + length(col("dst")))
+    if (gate.small) driverUnionFind(spark, gate.frame.collect())
+    else labelsByStar(gate.frame, maxIter)
   }
 
   private def driverUnionFind(spark: org.apache.spark.sql.SparkSession,

@@ -1,7 +1,10 @@
 package graft.kg
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+
+import graft.ops.SizeGate
 
 /** Graph analytics over an edge list — the "query the graph you built"
   * surface (composes with the constructed KG's (subj_guid, obj_guid) edges,
@@ -25,21 +28,15 @@ import org.apache.spark.sql.functions._
   */
 object Graph {
 
-  /** Row+byte gate for the driver fast paths below (the
-    * [[Canonicalize.connectedComponents]] adaptive posture): one agg pass
-    * over the checkpointed distinct-edge frame measures rows AND raw string
-    * bytes; at or below both limits the iteration runs on the driver —
-    * per-iteration DataFrame-loop scheduling overhead dwarfs the work for
-    * small graphs (each distributed iteration is a join + agg + checkpoint
-    * job; 10 iterations ≈ 2-3 s of pure orchestration at any size) — above
-    * them the distributed loop is authoritative. */
-  private def fitsDriver(e: DataFrame, driverThreshold: Long,
-      maxDriverStringBytes: Long): Boolean = {
-    val r = e.agg(count(lit(1)),
-      sum(length(col("src")) + length(col("dst")))).head()
-    r.getLong(0) <= driverThreshold &&
-      (r.isNullAt(1) || r.getLong(1) <= maxDriverStringBytes)
-  }
+  /** Checkpoint the distinct edge set and size it in the same job for the
+    * driver fast paths below ([[SizeGate.Driver]]: rows and raw
+    * string bytes). Within the gate the iteration runs on the driver —
+    * each distributed iteration is a join + agg + checkpoint job, so 10
+    * iterations cost ~2-3 s of pure orchestration at any size — above it
+    * the distributed loop is authoritative. */
+  private def distinctEdges(site: String, edges: DataFrame): SizeGate.Sized =
+    SizeGate.checkpoint(site, edges.select(col("src"), col("dst")).distinct(),
+      SizeGate.Driver, length(col("src")) + length(col("dst")))
 
   /** Driver-side power method over a collected edge list — the identical
     * update rule in IEEE double arithmetic; contribution sums run in sorted
@@ -79,25 +76,21 @@ object Graph {
       ranks = next
       iter += 1
     }
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
+    val rows = new java.util.ArrayList[Row]()
     var i = 0
-    while (i < n) { rows.add(org.apache.spark.sql.Row(nodes(i), ranks(i))); i += 1 }
-    spark.createDataFrame(rows, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.DoubleType, nullable = false))))
+    while (i < n) { rows.add(Row(nodes(i), ranks(i))); i += 1 }
+    spark.createDataFrame(rows, StructType(Seq(
+      StructField("node", StringType, nullable = false),
+      StructField("rank", DoubleType, nullable = false))))
   }
 
   /** Distinct-edge PageRank. `edges` needs (src, dst) columns; multi-edges
     * collapse. Returns (node, rank). */
   def pageRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85,
-      danglingRedistribution: Boolean = false, tol: Double = 0.0,
-      driverThreshold: Long = 2000000L,
-      maxDriverStringBytes: Long = 128L * 1024 * 1024): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(eager = true)
-    if (fitsDriver(e, driverThreshold, maxDriverStringBytes)) {
+      danglingRedistribution: Boolean = false, tol: Double = 0.0): DataFrame = {
+    val gate = distinctEdges("graph.pagerank", edges)
+    val e = gate.frame
+    if (gate.small) {
       val spark = edges.sparkSession
       val rows = e.collect().map(r => (r.getString(0), r.getString(1)))
       e.unpersist()
@@ -157,12 +150,10 @@ object Graph {
     * This is the general traversal the 2-hop query specializes: ego
     * networks, reachability cones, provenance closures over the KG's
     * (subj_guid, obj_guid) edges. */
-  def kHop(edges: DataFrame, seeds: DataFrame, k: Int,
-      driverThreshold: Long = 2000000L,
-      maxDriverStringBytes: Long = 128L * 1024 * 1024): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(eager = true)
-    if (fitsDriver(e, driverThreshold, maxDriverStringBytes)) {
+  def kHop(edges: DataFrame, seeds: DataFrame, k: Int): DataFrame = {
+    val gate = distinctEdges("graph.khop", edges)
+    val e = gate.frame
+    if (gate.small) {
       // driver BFS over the collected adjacency — pure integer hop counts,
       // bit-identical to the distributed loop by construction; per-hop the
       // distributed form costs join + anti-join + two checkpoints of pure
@@ -183,16 +174,11 @@ object Graph {
           .distinct.filterNot(dist.contains)
         frontier.foreach(v => dist(v) = hop)
       }
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row]()
-      dist.foreach { case (node, h) =>
-        rows.add(org.apache.spark.sql.Row(node, h))
-      }
-      return spark.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("node",
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField("min_hops",
-            org.apache.spark.sql.types.IntegerType, nullable = false))))
+      val rows = new java.util.ArrayList[Row]()
+      dist.foreach { case (node, h) => rows.add(Row(node, h)) }
+      return spark.createDataFrame(rows, StructType(Seq(
+        StructField("node", StringType, nullable = false),
+        StructField("min_hops", IntegerType, nullable = false))))
     }
     var visited = seeds.select(col("node")).distinct()
       .withColumn("min_hops", lit(0)).localCheckpoint(eager = true)

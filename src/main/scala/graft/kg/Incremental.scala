@@ -361,16 +361,19 @@ object Incremental {
 
     // guid rewrite map, derived from `cc` alone: every cc key is a flagged
     // node key, and by the invariant its node's guid is guidFor(type, key) —
-    // so no join against the node table (only keys that change are kept)
-    val (rewrite, rwCounts) = graft.ops.CapMetrics.checkpointSized(
+    // so no join against the node table (only keys that change are kept).
+    // Sized for the broadcast below by rows AND the two broadcast guid
+    // columns' bytes (two 64-char hex strings a row)
+    val gate = graft.ops.SizeGate.checkpoint("resolve.rewrite",
       cc.filter(col("cc_key") =!= col("component"))
         .select(
           Link.guidFor(col("cc_et"), col("cc_key")).as("old_guid"),
           Link.guidFor(col("cc_et"), col("component")).as("new_guid"),
           col("cc_et").as("rw_et"), col("cc_key").as("old_name"),
           col("component").as("new_name")),
-      count(lit(1)))
-    val nRewrites = rwCounts.getLong(0)
+      graft.ops.SizeGate.Registry, length(col("old_guid")) + length(col("new_guid")))
+    val rewrite = gate.frame
+    val nRewrites = gate.rows
     val tDiscover = System.currentTimeMillis()
     // rewrite is materialized — free the discovery's internal checkpoints
     // so a resolver LOOP (per-micro-batch resolveEvery) stays O(1) in
@@ -378,11 +381,10 @@ object Incremental {
     freeDiscovery()
 
     if (nRewrites > 0L) {
-      // size-gated broadcast (rewrite is checkpointed and sized): an
-      // explicit hint is never demoted by AQE, so only hint when measured
-      // small; above the gate the planner/AQE pick the join side
-      val hintBc = nRewrites <= cfg.maxBroadcastRegistryRows
-      def bc(df: DataFrame): DataFrame = if (hintBc) broadcast(df) else df
+      // size-gated broadcast: an explicit hint is never demoted by AQE, so
+      // only hint when measured small; above the gate the planner/AQE pick
+      // the join side
+      def bc(df: DataFrame): DataFrame = if (gate.small) broadcast(df) else df
 
       // AFFECTED edge rows only: delete the pre-rewrite rows, insert the
       // rewritten ones — O(affected) written, not O(table). Edges and nodes

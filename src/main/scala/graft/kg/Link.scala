@@ -52,19 +52,12 @@ object Link {
         * candidate pairs; buckets larger than this are dropped from candidate
         * generation (keys are identical-normalized anyway only when truly
         * equal, and equal keys never need a fuzzy edge). */
-      maxBandBucket: Int = 10000,
-      /** Registry-size gates for the labeling broadcast hint: Pipeline hints
-        * broadcast only when the measured registry is at or below BOTH
-        * limits (rows, and raw string bytes estimated in the same agg pass —
-        * the broadcast hash relation costs ~3-4x the raw bytes). Above them
-        * the join is left to the planner/AQE, which picks a shuffle join —
-        * an explicit hint would OVERRIDE autoBroadcastJoinThreshold and is
-        * never demoted, so a billion-entity registry would OOM. Defaults
-        * allow a few-hundred-MB broadcast (executors at this tier run
-        * multi-GB heaps; measured: a 1.7M-row / ~180 MB registry broadcast
-        * beats the 50M-triple shuffle join it replaces). */
-      maxBroadcastRegistryRows: Long = 4000000L,
-      maxBroadcastRegistryBytes: Long = 256L * 1024 * 1024)
+      maxBandBucket: Int = 10000) {
+    /** The registry broadcast limit ([[graft.ops.SizeGate.Registry]]), for
+      * callers that size a registry themselves; not settable. */
+    def maxBroadcastRegistryRows: Long = graft.ops.SizeGate.Registry.rows
+    def maxBroadcastRegistryBytes: Long = graft.ops.SizeGate.Registry.bytes
+  }
 
   /** lowercase + trim + collapse internal whitespace. */
   def normKey(c: Column): Column =
@@ -376,8 +369,8 @@ object Link {
     * registry sides. An explicit hint OVERRIDES autoBroadcastJoinThreshold
     * and is never demoted (AQE only promotes shuffle→broadcast, it does not
     * demote a hinted broadcast), so the hint must be size-gated by the
-    * caller: [[Pipeline.run]] counts the (checkpointed) registry and hints
-    * only under [[Config.maxBroadcastRegistryRows]]. With the hint off, the
+    * caller: [[Pipeline.run]] sizes the checkpointed registry through
+    * [[graft.ops.SizeGate]] and hints only within its limit. With the hint off, the
     * planner picks a shuffle join and AQE still promotes it to broadcast at
     * runtime when the registry turns out small — the safe default at a
     * billion distinct entities.

@@ -113,22 +113,20 @@ object Pipeline {
     val (regRaw, freeRegInternals) = Link.registryManaged(raw, dict, linkCfg)
     // size-gated broadcast hint: rows AND estimated raw bytes are observed
     // by the registry's own checkpoint job (no second scan). Above either
-    // gate the labeling joins shuffle (AQE may still promote) instead of
+    // limit the labeling joins shuffle (AQE may still promote) instead of
     // forcing an unbounded broadcast — the OOM-class failure mode at
     // billions of distinct entities.
-    val (reg, regSized) = graft.ops.CapMetrics.checkpointSized(regRaw, count(lit(1)),
-      sum(length(col("entity_type")) + length(col("norm_key"))
-        + length(col("canonical_key")) + length(col("guid"))))
+    val gate = graft.ops.SizeGate.checkpoint("link.registry", regRaw,
+      graft.ops.SizeGate.Registry,
+      length(col("entity_type")) + length(col("norm_key"))
+        + length(col("canonical_key")) + length(col("guid")))
+    val reg = gate.frame
     // the registry is materialized: free the linking stage's internal
     // checkpoints NOW (mention set + same-as candidate/band frames) — a
     // per-bucket/per-micro-batch loop would otherwise retain one set per
     // pass for the process lifetime
     freeRegInternals()
-    val regRows = regSized.getLong(0)
-    val regBytes = if (regSized.isNullAt(1)) 0L else regSized.getLong(1)
-    val labeled = Link.label(raw, reg,
-      hintBroadcast = regRows <= linkCfg.maxBroadcastRegistryRows &&
-        regBytes <= linkCfg.maxBroadcastRegistryBytes)
+    val labeled = Link.label(raw, reg, hintBroadcast = gate.small)
     Result(Materialize.edges(labeled), Materialize.nodes(reg), reg,
       cleanup = { keepRegistry =>
         freeRaw()

@@ -73,7 +73,7 @@ object Bpe {
     * Execution (the r5 "one Spark job per merge" fix): the corpus reduces
     * to the distinct-word frequency table in ONE distributed scan as
     * before, and then — when the measured vocabulary fits
-    * `maxDriverVocab` rows — the merge loop runs ON THE DRIVER with
+    * [[SizeGate.DriverRows]] — the merge loop runs ON THE DRIVER with
     * incremental pair counts: a TreeSet argmax under the identical total
     * order (cnt desc, a asc, b asc) and O(words-containing-pair) count
     * updates per merge, instead of a full distributed recount + driver
@@ -86,14 +86,14 @@ object Bpe {
     * order is String.compareTo — identical to the distributed path on the
     * repo's ASCII corpora convention. */
   def learnMerges(docs: DataFrame, nMerges: Int,
-      textCol: String = "text",
-      maxDriverVocab: Long = 2000000L): Seq[(Int, String, String)] = {
+      textCol: String = "text"): Seq[(Int, String, String)] = {
     require(nMerges > 0, s"learnMerges needs nMerges > 0: $nMerges")
     val spark = docs.sparkSession
     import spark.implicits._
-    val wordsCp = toWords(docs, textCol).localCheckpoint(true)
-    val nVocab = wordsCp.count()
-    if (nVocab <= maxDriverVocab) {
+    val gate = SizeGate.checkpoint("bpe.vocab", toWords(docs, textCol),
+      SizeGate.DriverRows, length(col("word")) + 8)
+    val wordsCp = gate.frame
+    if (gate.small) {
       val vocab = wordsCp.as[(String, Long)].collect()
       wordsCp.unpersist()
       return learnMergesDriver(vocab, nMerges)

@@ -42,19 +42,24 @@ object CapMetrics {
   private def harvest(name: String, row: Row): Unit = {
     if (name.startsWith("graft.cap.")) {
       // graft.cap.<site>#<seq>
-      val site = name.stripPrefix("graft.cap.").takeWhile(_ != '#')
-      val vals = row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
-        f -> (if (row.isNullAt(i)) 0L else row.getLong(i))
-      }.toMap
-      bySite.put(site, (writes.incrementAndGet(), vals))
-      val dropped = vals.getOrElse("dropped_rows", 0L)
-      if (dropped > 0L)
-        log.warn(s"[graft] cap '$site' dropped $dropped rows " +
-          vals.removed("dropped_rows").map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")"))
-      else if (vals.nonEmpty)
-        log.info(s"[graft] metrics '$site': " +
-          vals.map { case (k, v) => s"$k=$v" }.mkString(", "))
+      record(name.stripPrefix("graft.cap.").takeWhile(_ != '#'),
+        row.schema.fieldNames.zipWithIndex.map { case (f, i) =>
+          f -> (if (row.isNullAt(i)) 0L else row.getLong(i))
+        }.toMap)
     }
+  }
+
+  /** Record driver-side metrics for `site` as if harvested from a query
+    * (e.g. a [[SizeGate]] decision); same map, same logging. */
+  def record(site: String, vals: Map[String, Long]): Unit = {
+    bySite.put(site, (writes.incrementAndGet(), vals))
+    val dropped = vals.getOrElse("dropped_rows", 0L)
+    if (dropped > 0L)
+      log.warn(s"[graft] cap '$site' dropped $dropped rows " +
+        vals.removed("dropped_rows").map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")"))
+    else if (vals.nonEmpty)
+      log.info(s"[graft] metrics '$site': " +
+        vals.map { case (k, v) => s"$k=$v" }.mkString(", "))
   }
 
   private def ensureListener(spark: SparkSession): Unit =
@@ -91,14 +96,15 @@ object CapMetrics {
     * of the frame. Returns the checkpointed frame and the metrics row
     * (column i = aggregate i; a sum over zero rows is null). Falls back to
     * one `agg` over the checkpoint only when the observation is missing
-    * (the AQE empty-relation hazard above). */
+    * (the AQE empty-relation hazard above). [[observed]] nodes inside `df`
+    * are harvested from the same execution, as [[checkpointHarvest]] does. */
   def checkpointSized(df: DataFrame, cols: Column*): (DataFrame, Row) = {
     val name = s"graft.size#${seq.incrementAndGet()}"
     val observed = df.observe(name, cols.head, cols.tail: _*)
     val cp = observed.localCheckpoint(eager = true)
-    val row = observed.queryExecution.observedMetrics.getOrElse(name,
-      cp.agg(cols.head, cols.tail: _*).head())
-    (cp, row)
+    val metrics = observed.queryExecution.observedMetrics
+    metrics.foreach { case (n, row) => harvest(n, row) }
+    (cp, metrics.getOrElse(name, cp.agg(cols.head, cols.tail: _*).head()))
   }
 
   /** Latest harvested metrics for a site ("" map if never fired). Listener

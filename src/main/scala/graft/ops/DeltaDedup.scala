@@ -251,14 +251,16 @@ object DeltaDedup {
       sum(when(col("bucket_n") > cfg.maxBandBucket, col("bucket_n"))
         .otherwise(0L)).as("dropped_rows"),
       max(col("bucket_n")).as("max_bucket"))
-    val over = CapMetrics.checkpointHarvest(
+    // the drop counts are harvested from the same checkpoint job that sizes
+    // the over-cap set; broadcast only when measured small (explicit hints
+    // are never demoted by AQE)
+    val gate = SizeGate.checkpoint("dedup.delta.over",
       observed.filter(col("bucket_n") > cfg.maxBandBucket)
-        .select(col("band"), col("band_hash")))
-    // structurally ≤ rows/maxBandBucket entries; broadcast only when
-    // measured small (explicit hints are never demoted by AQE)
-    val overSmall = over.count() <= 1500000L
+        .select(col("band"), col("band_hash")),
+      SizeGate.CappedBuckets, lit(12L))
+    val over = gate.frame
     def capped(df: DataFrame): DataFrame =
-      df.join(if (overSmall) broadcast(over) else over,
+      df.join(if (gate.small) broadcast(over) else over,
         Seq("band", "band_hash"), "left_anti")
 
     val candidates = capped(fresh).select(col("doc_id").as("doc_a"),

@@ -50,9 +50,8 @@ object Perplexity {
 
   /** Sealing variant of [[lmScoreManaged]]: eagerly checkpoints the
     * (docs-sized) result and frees the internal count-table checkpoints. */
-  def lmScore(docs: DataFrame, target: DataFrame, addK: Double = 1.0,
-      maxBroadcastRows: Long = 50000000L): DataFrame = {
-    val m = lmScoreManaged(docs, target, addK, maxBroadcastRows)
+  def lmScore(docs: DataFrame, target: DataFrame, addK: Double = 1.0): DataFrame = {
+    val m = lmScoreManaged(docs, target, addK)
     val out = m.pairs.localCheckpoint(eager = true)
     m.free()
     out
@@ -61,8 +60,8 @@ object Perplexity {
   /** Lazy variant: the returned frame references the internal eager
     * checkpoints of the measured count tables — call `free()` only after
     * materializing (the [[Dedup.ManagedPairs]] contract). */
-  def lmScoreManaged(docs: DataFrame, target: DataFrame, addK: Double = 1.0,
-      maxBroadcastRows: Long = 50000000L): Dedup.ManagedPairs = {
+  def lmScoreManaged(docs: DataFrame, target: DataFrame,
+      addK: Double = 1.0): Dedup.ManagedPairs = {
     require(addK > 0.0, s"addK must be > 0: $addK")
     val bk = udf(bigramHashKernel _)
 
@@ -80,34 +79,28 @@ object Perplexity {
     // the three count lanes (unigram table, bigram table, vocabulary size)
     // are independent sub-DAGs off the shared tb checkpoint / target scan:
     // build them as concurrent jobs instead of five serial driver barriers
-    var uni: DataFrame = null
-    var big: DataFrame = null
-    var nUni = 0L; var nBig = 0L; var v = 0L
+    // (each table is checkpointed and sized in one job: 16-byte rows)
+    var uni: SizeGate.Sized = null
+    var big: SizeGate.Sized = null
+    var v = 0L
     graft.kg.Materialize.awaitBoth(
-      () => {
-        uni = tb.groupBy(col("h1")).agg(count(lit(1)).as("c1"))
-          .localCheckpoint(eager = true)
-        nUni = uni.count()
-      },
+      () => uni = SizeGate.checkpoint("perplexity.unigrams",
+        tb.groupBy(col("h1")).agg(count(lit(1)).as("c1")), SizeGate.KeySet, lit(16L)),
       () => graft.kg.Materialize.awaitBoth(
-        () => {
-          big = tb.groupBy(col("h12")).agg(count(lit(1)).as("c2"))
-            .localCheckpoint(eager = true)
-          nBig = big.count()
-        },
+        () => big = SizeGate.checkpoint("perplexity.bigrams",
+          tb.groupBy(col("h12")).agg(count(lit(1)).as("c2")), SizeGate.KeySet, lit(16L)),
         () => v = target.select(explode(tokK(col("text"))).as("h"))
           .agg(countDistinct(col("h"))).head().getLong(0)))
     tb.unpersist()
-    val uniP = if (nUni <= maxBroadcastRows) broadcast(uni) else uni
-    val bigP = if (nBig <= maxBroadcastRows) broadcast(big) else big
+    def probe(g: SizeGate.Sized): DataFrame = if (g.small) broadcast(g.frame) else g.frame
 
     // raw corpus: one bigram scan, count-table lookups, doc-keyed agg
     val logp = log((coalesce(col("c2"), lit(0L)).cast("double") + addK) /
       (coalesce(col("c1"), lit(0L)).cast("double") + addK * v))
     val scored = docs.select(col("doc_id"), explode(bk(col("text"))).as("b"))
       .select(col("doc_id"), col("b._1").as("h1"), col("b._2").as("h12"))
-      .join(uniP, Seq("h1"), "left")
-      .join(bigP, Seq("h12"), "left")
+      .join(probe(uni), Seq("h1"), "left")
+      .join(probe(big), Seq("h12"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sum(logp).as("lp"))
 
@@ -121,6 +114,6 @@ object Perplexity {
         exp(-(col("lm_logprob").cast("double")) / col("n_bigrams"))
           .cast("float")))
       .select(col("doc_id"), col("n_bigrams"), col("lm_logprob"), col("lm_ppl"))
-    Dedup.ManagedPairs(out, () => { uni.unpersist(); big.unpersist(); () })
+    Dedup.ManagedPairs(out, () => { uni.frame.unpersist(); big.frame.unpersist(); () })
   }
 }

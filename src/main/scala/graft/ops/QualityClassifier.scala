@@ -60,8 +60,8 @@ object QualityClassifier {
   /** Sealing variant of [[nbScoreManaged]]: eagerly checkpoints the
     * (docs-sized) result and frees the internal count-table checkpoints. */
   def nbScore(docs: DataFrame, positive: DataFrame, negative: DataFrame,
-      addK: Double = 1.0, maxBroadcastRows: Long = 50000000L): DataFrame = {
-    val m = nbScoreManaged(docs, positive, negative, addK, maxBroadcastRows)
+      addK: Double = 1.0): DataFrame = {
+    val m = nbScoreManaged(docs, positive, negative, addK)
     val out = m.pairs.localCheckpoint(eager = true)
     m.free()
     out
@@ -73,46 +73,38 @@ object QualityClassifier {
     * `(doc_id, n_tokens, nb_logodds float32, nb_keep)` — one row per input
     * doc, empty docs score the bare prior. */
   def nbScoreManaged(docs: DataFrame, positive: DataFrame,
-      negative: DataFrame, addK: Double = 1.0,
-      maxBroadcastRows: Long = 50000000L): Dedup.ManagedPairs = {
+      negative: DataFrame, addK: Double = 1.0): Dedup.ManagedPairs = {
     require(addK > 0.0, s"addK must be > 0: $addK")
     val tk = udf(tokenHashKernel _)
 
     // per-class count tables: collapse map-side to O(vocab) rows each;
     // 8-byte-keyed (the oracle's raw-string join proves collision freedom).
-    // Each class lane (checkpoint + fused totals/rows agg + doc count) is
-    // independent — two concurrent lanes instead of nine serial driver
-    // barriers; only the shared-vocabulary count needs both tables.
-    var pos: DataFrame = null
-    var neg: DataFrame = null
-    var nPos = 0L; var nNeg = 0L
-    var posRows = 0L; var negRows = 0L
+    // Each class lane (checkpoint sized with its token total in one job +
+    // doc count) is independent — two concurrent lanes instead of nine
+    // serial driver barriers; only the shared-vocabulary count needs both
+    // tables. The tables feed the V-union, the totals and the join.
+    def table(site: String, texts: DataFrame, c: String): SizeGate.Sized =
+      SizeGate.checkpoint(site, texts.select(explode(tk(col("text"))).as("h"))
+        .groupBy(col("h")).agg(count(lit(1)).as(c)), SizeGate.KeySet, lit(16L),
+        sum(col(c)))
+    var pos: SizeGate.Sized = null
+    var neg: SizeGate.Sized = null
     var nPosDocs = 0L; var nNegDocs = 0L
     graft.kg.Materialize.awaitBoth(
       () => {
-        pos = positive.select(explode(tk(col("text"))).as("h"))
-          .groupBy(col("h")).agg(count(lit(1)).as("c_pos"))
-          .localCheckpoint(eager = true) // consumed by V-union + totals + join
-        val r = pos.agg(sum(col("c_pos")), count(lit(1))).head()
-        nPos = if (r.isNullAt(0)) 0L else r.getLong(0)
-        posRows = r.getLong(1)
+        pos = table("quality.positive", positive, "c_pos")
         nPosDocs = positive.count()
       },
       () => {
-        neg = negative.select(explode(tk(col("text"))).as("h"))
-          .groupBy(col("h")).agg(count(lit(1)).as("c_neg"))
-          .localCheckpoint(eager = true)
-        val r = neg.agg(sum(col("c_neg")), count(lit(1))).head()
-        nNeg = if (r.isNullAt(0)) 0L else r.getLong(0)
-        negRows = r.getLong(1)
+        neg = table("quality.negative", negative, "c_neg")
         nNegDocs = negative.count()
       })
-    val v = pos.select(col("h")).union(neg.select(col("h")))
+    val (nPos, nNeg) = (pos.extra(0), neg.extra(0))
+    val v = pos.frame.select(col("h")).union(neg.frame.select(col("h")))
       .distinct().count()
     val prior = math.log(math.max(nPosDocs, 1L).toDouble) -
       math.log(math.max(nNegDocs, 1L).toDouble)
-    val posP = if (posRows <= maxBroadcastRows) broadcast(pos) else pos
-    val negP = if (negRows <= maxBroadcastRows) broadcast(neg) else neg
+    def probe(g: SizeGate.Sized): DataFrame = if (g.small) broadcast(g.frame) else g.frame
 
     // raw corpus: one token scan, count-table lookups, doc-keyed agg
     val w = log((coalesce(col("c_pos"), lit(0L)).cast("double") + addK) /
@@ -120,8 +112,8 @@ object QualityClassifier {
       log((coalesce(col("c_neg"), lit(0L)).cast("double") + addK) /
         (lit(nNeg).cast("double") + addK * v))
     val scored = docs.select(col("doc_id"), explode(tk(col("text"))).as("h"))
-      .join(posP, Seq("h"), "left")
-      .join(negP, Seq("h"), "left")
+      .join(probe(pos), Seq("h"), "left")
+      .join(probe(neg), Seq("h"), "left")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(w).as("sw"))
 
@@ -134,6 +126,6 @@ object QualityClassifier {
         (coalesce(col("sw"), lit(0.0)) + prior).cast("float"))
       .withColumn("nb_keep", col("nb_logodds") > lit(0.0f))
       .select(col("doc_id"), col("n_tokens"), col("nb_logodds"), col("nb_keep"))
-    Dedup.ManagedPairs(out, () => { pos.unpersist(); neg.unpersist(); () })
+    Dedup.ManagedPairs(out, () => { pos.frame.unpersist(); neg.frame.unpersist(); () })
   }
 }

@@ -98,8 +98,7 @@ object SemDedup {
           // primitive-array view first: the typed-encoder Seq is not
           // guaranteed indexed and the centroid scoring touches every
           // element nLists times (identical arithmetic either way)
-          val v = vSeq.toArray.toSeq
-          val cls = Similarity.nearestCentroids(v, cs, nAssign).sorted
+          val cls = Similarity.nearestCentroids(vSeq.toArray, cs, nAssign).sorted
           cls.map(cl => (cl, id, vSeq, cls))
         }
       }

@@ -133,8 +133,8 @@ object Similarity {
   /** Exact top-k neighbors for each query row.
     * `queries` must have (query_id, q_embedding).
     *
-    * Plan (r5 rewrite): the query matrix is measured and — under
-    * `maxDriverQueries` rows — shipped to executors once; each corpus
+    * Plan (r5 rewrite): the query matrix is measured and — within
+    * [[SizeGate.DriverRows]] — shipped to executors once; each corpus
     * partition keeps a bounded per-query heap of its LOCAL top-k, so only
     * Q×partitions×k candidate rows ever shuffle, never the Q×N scored
     * cross product (the previous windowed plan shuffled+sorted 8M scored
@@ -145,16 +145,18 @@ object Similarity {
     * takes the exact global window rank — output (values, ranks AND
     * tie-breaks) is identical to the naive plan, which remains as the
     * over-gate fallback for query sets too large to ship whole. */
-  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      maxDriverQueries: Long = 2000000L): DataFrame = {
+  def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val qcnt = queries.count()
-    val scored = if (qcnt <= maxDriverQueries) {
-      val qs = queries
-        .select(col("query_id").cast("long"), col("q_embedding"))
-        .as[(Long, Seq[Float])].collect()
+    // sized and collected from one checkpoint, freed once read; the
+    // over-gate plan re-reads `queries` itself
+    val gate = SizeGate.checkpoint("knn.queries",
+      queries.select(col("query_id").cast("long"), col("q_embedding")),
+      SizeGate.DriverRows, SizeGate.vectorBytes(col("q_embedding")))
+    val scored = if (gate.small) {
+      val qs = gate.frame.as[(Long, Seq[Float])].collect()
         .map { case (id, v) => (id, v.toArray[Float]) }
+      gate.frame.unpersist()
       val bc = spark.sparkContext.broadcast(qs)
       // spread first: the per-partition heap kernel runs on the scan's
       // partitioning, which a small parquet file caps at 1-4 tasks
@@ -215,6 +217,7 @@ object Similarity {
           }
         }.toDF("query_id", "vec_id", "cos")
     } else {
+      gate.frame.unpersist()
       corpus.crossJoin(broadcast(queries))
         .filter(col("query_id") =!= col("vec_id"))
         .withColumn("cos", cosine(col("q_embedding"), col("embedding")))
@@ -358,13 +361,7 @@ object Similarity {
 
   // ---- IVF (inverted-file) ANN ----------------------------------------------
 
-  /** `maxBroadcastProbeRows`/`Bytes` gate the probed-queries broadcast in
-    * [[ivfTopK]]: explicit broadcast hints are never demoted by AQE, and the
-    * probed frame is queries x nProbe rows EACH carrying the full embedding
-    * — un-gated it is the OOM path for large query batches. */
-  final case class IvfConfig(nLists: Int = 64, kmeansIters: Int = 5, nProbe: Int = 8,
-      maxBroadcastProbeRows: Long = 2000000L,
-      maxBroadcastProbeBytes: Long = 128L << 20)
+  final case class IvfConfig(nLists: Int = 64, kmeansIters: Int = 5, nProbe: Int = 8)
 
   /** Deterministic Lloyd k-means coarse quantizer: centroids initialized
     * from the `nLists` smallest ids (pure function of the corpus — no RNG),
@@ -376,37 +373,30 @@ object Similarity {
     * skips the quantizer (asserted in tests; cheap, process-wide). */
   private[ops] val kmeansRuns = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  def kmeansCentroids(corpus: DataFrame, cfg: IvfConfig,
-      maxDriverVecFloats: Long = 32L * 1024 * 1024): Array[Array[Double]] = {
+  def kmeansCentroids(corpus: DataFrame, cfg: IvfConfig): Array[Array[Double]] = {
     kmeansRuns.incrementAndGet()
     val spark = corpus.sparkSession
     import spark.implicits._
-    // checkpoint once: the iterations re-scan these vectors kmeansIters
-    // times; freed before returning
-    val vecs = corpus.select(col("vec_id"), col("embedding"))
-      .as[(Long, Seq[Float])]
-      .localCheckpoint(eager = true)
-
     // Driver fast path: Lloyd's per-iteration cost distributed is one tiny
     // mapPartitions job + a collect — at small corpus sizes that is
     // kmeansIters jobs of pure scheduling. The driver loop is
-    // SINGLE-THREADED, so the gate is a flops budget (rows × dim × nLists
-    // × iters ≤ ~2e9, well under a second of distance arithmetic), not
-    // just a memory bound — a 20k×64 corpus at nLists=64 is in, a corpus
-    // whose assignment compute would out-cost the saved job overhead is
-    // out. The driver loop REPLICATES the distributed arithmetic
-    // bit-for-bit (per-PARTITION accumulation in row order, partials
-    // combined per cluster in partition order — the identical IEEE sum
-    // tree), so centroids — and therefore every assignment, SemDeDup
-    // blocking decision and persisted index — are byte-identical to the
-    // distributed path on the same corpus.
-    val nFloats = {
-      val r = vecs.toDF("vec_id", "embedding")
-        .agg(sum(size(col("embedding")))).head()
-      if (r.isNullAt(0)) 0L else r.getLong(0)
-    }
-    val driverFlops = nFloats * cfg.nLists.toLong * cfg.kmeansIters.toLong
-    if (nFloats <= maxDriverVecFloats && driverFlops <= 2000000000L) {
+    // SINGLE-THREADED, so the gate ([[SizeGate.lloyd]]) is a flops budget
+    // as well as a memory bound — a 20k×64 corpus at nLists=64 is in, a
+    // corpus whose assignment compute would out-cost the saved job
+    // overhead is out. The driver loop REPLICATES the distributed
+    // arithmetic bit-for-bit (per-PARTITION accumulation in row order,
+    // partials combined per cluster in partition order — the identical
+    // IEEE sum tree), so centroids — and therefore every assignment,
+    // SemDeDup blocking decision and persisted index — are byte-identical
+    // to the distributed path on the same corpus.
+    // The vectors are checkpointed once (the iterations re-scan them
+    // kmeansIters times; freed before returning) and sized in that job.
+    val gate = SizeGate.checkpoint("kmeans.vectors",
+      corpus.select(col("vec_id"), col("embedding")),
+      SizeGate.lloyd(cfg.nLists, cfg.kmeansIters),
+      size(col("embedding")).cast("long") * 4L)
+    val vecs = gate.frame.as[(Long, Seq[Float])]
+    if (gate.small) {
       // materialize rows as primitive float arrays ONCE at collect time:
       // the deserialized Seq[Float] is not guaranteed indexed, and the
       // driver loop touches every element nLists times per iteration
@@ -437,7 +427,7 @@ object Similarity {
           // guaranteed indexed, and the distance loop touches every
           // element nLists times (same arithmetic, same order)
           val v = vSeq.toArray
-          val cl = nearestCentroidArr(v, cs)
+          val cl = nearestCentroid(v, cs)
           counts(cl) += 1
           var d = 0
           val n = math.min(dim, v.length)
@@ -489,7 +479,7 @@ object Similarity {
         val sums = Array.ofDim[Double](cs.length, dim)
         val counts = new Array[Long](cs.length)
         slice.foreach { case (_, _, v) =>
-          val cl = nearestCentroidArr(v, cs)
+          val cl = nearestCentroid(v, cs)
           counts(cl) += 1
           var d = 0
           val n = math.min(dim, v.length)
@@ -515,8 +505,9 @@ object Similarity {
     centroids
   }
 
-  /** Index of the max-cosine centroid (ties to the lower index). */
-  private[ops] def nearestCentroid(v: Seq[Float], cs: Array[Array[Double]]): Int = {
+  /** Index of the max-cosine centroid (ties to the lower index), over a
+    * primitive array: O(1) unboxed element access for the Lloyd loops. */
+  private def nearestCentroid(v: Array[Float], cs: Array[Array[Double]]): Int = {
     var best = 0
     var bestCos = Double.MinValue
     var i = 0
@@ -536,48 +527,8 @@ object Similarity {
     best
   }
 
-  /** [[nearestCentroid]] over a primitive array — the identical IEEE
-    * expression sequence (same loop order, same ops), O(1) unboxed element
-    * access for the driver Lloyd loop. */
-  private def nearestCentroidArr(v: Array[Float], cs: Array[Array[Double]]): Int = {
-    var best = 0
-    var bestCos = Double.MinValue
-    var i = 0
-    while (i < cs.length) {
-      val c = cs(i)
-      var dot = 0.0; var nc = 0.0; var nv = 0.0
-      var d = 0
-      val n = math.min(v.length, c.length)
-      while (d < n) {
-        dot += v(d).toDouble * c(d); nc += c(d) * c(d)
-        nv += v(d).toDouble * v(d); d += 1
-      }
-      val cos = if (nc == 0 || nv == 0) -2.0 else dot / math.sqrt(nc * nv)
-      if (cos > bestCos) { bestCos = cos; best = i }
-      i += 1
-    }
-    best
-  }
-
-  private[ops] def nearestCentroids(v: Seq[Float], cs: Array[Array[Double]],
-      nProbe: Int): Seq[Int] = {
-    val scored = cs.indices.map { i =>
-      val c = cs(i)
-      var dot = 0.0; var nc = 0.0; var nv = 0.0
-      var d = 0
-      val n = math.min(v.length, c.length)
-      while (d < n) {
-        dot += v(d).toDouble * c(d); nc += c(d) * c(d)
-        nv += v(d).toDouble * v(d); d += 1
-      }
-      (i, if (nc == 0 || nv == 0) -2.0 else dot / math.sqrt(nc * nv))
-    }
-    scored.sortBy { case (i, cos) => (-cos, i) }.take(nProbe).map(_._1)
-  }
-
-  /** [[nearestCentroids]] over a primitive array — identical scores
-    * (same loop order), identical (-cos, i) sort, unboxed access. */
-  private def nearestCentroidsArr(v: Array[Float], cs: Array[Array[Double]],
+  /** The `nProbe` max-cosine centroids, ordered by (-cos, index). */
+  private[ops] def nearestCentroids(v: Array[Float], cs: Array[Array[Double]],
       nProbe: Int): Seq[Int] = {
     val scored = cs.indices.map { i =>
       val c = cs(i)
@@ -614,18 +565,15 @@ object Similarity {
       cfg: IvfConfig, centroids: Array[Array[Double]]): DataFrame = {
     val spark = listed.sparkSession
     import spark.implicits._
-    // same ship-volume gate as the r5 probed-broadcast (rows = queries ×
-    // nProbe; bytes = embedding floats + per-row overhead), measured with
-    // one agg pass over the query frame
-    val qSized = queries.agg(count(lit(1)), sum(size(col("q_embedding")))).head()
-    val qRows = qSized.getLong(0)
-    val probeRows = qRows * cfg.nProbe
-    val probeBytes = (if (qSized.isNullAt(1)) 0L
-      else qSized.getLong(1)) * 4L * cfg.nProbe + probeRows * 24L
-    if (probeRows <= cfg.maxBroadcastProbeRows &&
-        probeBytes <= cfg.maxBroadcastProbeBytes) {
-      val qs = queries.select(col("query_id").cast("long"), col("q_embedding"))
-        .as[(Long, Seq[Float])].collect()
+    // ship-volume gate: each query is packed into nProbe lists, so the
+    // probe packs are nProbe times the query rows and vector bytes; the
+    // queries are sized and collected from one checkpoint
+    val gate = SizeGate.checkpoint("ivf.probe",
+      queries.select(col("query_id").cast("long"), col("q_embedding")),
+      SizeGate.Driver.per(cfg.nProbe), SizeGate.vectorBytes(col("q_embedding")))
+    if (gate.small) {
+      val qs = gate.frame.as[(Long, Seq[Float])].collect()
+      gate.frame.unpersist()
       def dotA(a: Array[Float], b: Array[Float]): Double = {
         var acc = 0.0; var i = 0; val n = math.min(a.length, b.length)
         while (i < n) { acc += a(i).toDouble * b(i).toDouble; i += 1 }
@@ -637,7 +585,7 @@ object Similarity {
       qs.foreach { case (qid, qv) =>
         val q = qv.toArray
         val nq = math.sqrt(dotA(q, q))
-        nearestCentroids(qv, centroids, cfg.nProbe).foreach { lst =>
+        nearestCentroids(q, centroids, cfg.nProbe).foreach { lst =>
           packs(lst) += ((qid, q, nq))
         }
       }
@@ -706,8 +654,9 @@ object Similarity {
     } else {
       // over-gate fallback: the keyed scoring join (queries too large to
       // ship whole) — norms precomputed per side, local-heap pre-reduction
+      gate.frame.unpersist()
       val bc = spark.sparkContext.broadcast(centroids)
-      val probesUdf = udf((v: Array[Float]) => nearestCentroidsArr(v, bc.value, cfg.nProbe))
+      val probesUdf = udf((v: Array[Float]) => nearestCentroids(v, bc.value, cfg.nProbe))
       val probed = queries.select(col("query_id"), col("q_embedding"),
         explode(probesUdf(col("q_embedding"))).as("lst"),
         vecNorm(col("q_embedding")).as("n_q"))
@@ -732,7 +681,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val centroids = kmeansCentroids(corpus, cfg)
     val bc = spark.sparkContext.broadcast(centroids)
-    val listUdf = udf((v: Array[Float]) => nearestCentroidArr(v, bc.value))
+    val listUdf = udf((v: Array[Float]) => nearestCentroid(v, bc.value))
     val listed = corpus.select(col("vec_id"), col("embedding"),
       listUdf(col("embedding")).as("lst"))
     ivfScoreTopK(listed, queries, k, cfg, centroids)
@@ -764,7 +713,7 @@ object Similarity {
     val (fp, n) = corpusFingerprint(corpus)
     val centroids = kmeansCentroids(corpus, cfg)
     val bc = spark.sparkContext.broadcast(centroids)
-    val listUdf = udf((v: Array[Float]) => nearestCentroidArr(v, bc.value))
+    val listUdf = udf((v: Array[Float]) => nearestCentroid(v, bc.value))
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
     centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
       .toDF("lst", "centroid")
@@ -852,7 +801,7 @@ object Similarity {
     val centroids = spark.read.parquet(s"$dir/centroids.parquet")
       .as[(Int, Seq[Double])].collect().sortBy(_._1).map(_._2.toArray)
     val bc = spark.sparkContext.broadcast(centroids)
-    val listUdf = udf((v: Array[Float]) => nearestCentroidArr(v, bc.value))
+    val listUdf = udf((v: Array[Float]) => nearestCentroid(v, bc.value))
     newVecs.select(col("vec_id"), listUdf(col("embedding")).as("lst"))
       .write.mode("append").parquet(s"$dir/assignments.parquet")
     // atomic meta replace: a crash mid-write must leave the OLD meta (the

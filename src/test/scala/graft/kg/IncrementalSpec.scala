@@ -128,6 +128,10 @@ class IncrementalSpec extends AnyFunSuite {
     // two merges; the shorter variant is the lexicographic-min component
     // rep, so each b1 original is the entity whose guid gets rewritten
     assert(s2.rewritten == 2)
+    // the rewrite map's broadcast gate sized the two guid columns, not rows
+    // alone: 2 rows x (old + new 64-char sha256 hex)
+    val gate = graft.ops.CapMetrics.latest("gate.resolve.rewrite")
+    assert(gate.get("rows").contains(2L) && gate.get("bytes").contains(256L), s"$gate")
 
     // one-shot reference: everything in one batch, one full resolve
     val outF = Files.createTempDirectory("graft-full-r").toString

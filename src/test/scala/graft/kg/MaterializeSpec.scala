@@ -222,32 +222,6 @@ class MaterializeSpec extends AnyFunSuite {
     assert(Materialize.readTable(spark, table).get.count() == 2)
   }
 
-  /** Spark jobs started on this thread while `f` runs. Jobs are tagged with
-    * a thread-local job group; a sentinel job in a second group drains the
-    * (asynchronous, FIFO) listener bus before counting. */
-  private def jobsDuring[T](f: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"probe-${System.nanoTime()}"
-    val sentinel = s"$group-sentinel"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "jobsDuring")
-      val r = try f finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "jobsDuring sentinel")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!seen.contains(sentinel) && System.nanoTime() < deadline) Thread.sleep(10L)
-      assert(seen.contains(sentinel), "listener bus did not drain")
-      (r, seen.toArray.count(_ == group))
-    } finally sc.removeSparkListener(listener)
-  }
-
   /** base + delta + tombstone: the shape the resolver leaves behind. */
   private def mixedTable(): String = {
     import spark.implicits._
@@ -268,7 +242,7 @@ class MaterializeSpec extends AnyFunSuite {
     val table = mixedTable()
     val m = Materialize.currentManifest(table).get
     assert(m.base.nonEmpty && m.deltas.size == 2 && m.tombs.size == 1)
-    val (df, jobs) = jobsDuring(Materialize.readTable(spark, table).get)
+    val (df, jobs) = TestSpark.jobsDuring(Materialize.readTable(spark, table).get)
     assert(jobs == 0, s"building the merge-on-read frame started $jobs job(s)")
     assert(rows(df) == Set(("b", 20L), ("c", 3L), ("d", 4L)))
   }

@@ -65,11 +65,18 @@ class PipelineOracleSpec extends AnyFunSuite {
   test("exact path (fuzzy off) matches oracle exactly (P = R = 1.0)") {
     val turns = Transcripts.synthetic(spark,
       cfg.copy(nConvs = 120), partitions = 4)
-    val result = Pipeline.run(turns, Pipeline.syntheticDict(spark),
+    def run() = Pipeline.run(turns, Pipeline.syntheticDict(spark),
       Link.Config(fuzzy = false))
+    val result = run()
     val got = collectEdges(result.edges)
     val (expected, _) = Oracle.run(turns.collect().toSeq, dictMap, fuzzy = false)
     assert(got == expected)
+    // distributed mode (the label joins without a broadcast hint): the same
+    // edge and node rows
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val dist = TestSpark.distributed(run())
+    assert(rows(dist.edges) == rows(result.edges))
+    assert(rows(dist.nodes) == rows(result.nodes))
   }
 
   test("rerun convergence: merging the same corpus twice is a no-op") {

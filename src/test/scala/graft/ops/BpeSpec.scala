@@ -87,11 +87,11 @@ class BpeSpec extends AnyFunSuite {
   }
 
   test("driver merge loop == forced distributed loop on the classic corpus") {
-    // maxDriverVocab = 0 forces the per-merge distributed recount; the
+    // TestSpark.distributed forces the per-merge distributed recount; the
     // default takes the incremental driver loop — integer counts and the
     // identical argmax total order make the tables exactly equal
     val drv = Bpe.learnMerges(docs(corpus: _*), 8)
-    val dist = Bpe.learnMerges(docs(corpus: _*), 8, maxDriverVocab = 0L)
+    val dist = TestSpark.distributed(Bpe.learnMerges(docs(corpus: _*), 8))
     assert(drv == dist)
   }
 

@@ -64,7 +64,6 @@ class DeltaDedupSpec extends AnyFunSuite {
   }
 
   test("ingest over sequential batches == stateless ops vs the accumulated union") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-deltadedup").toString
     val cfg = Dedup.MinHashConfig(jaccardThreshold = 0.5)
 
     val batch0 = docs((0 until 7).map(f => f.toLong -> baseText(f)): _*)
@@ -76,39 +75,53 @@ class DeltaDedupSpec extends AnyFunSuite {
         211L -> "solo words here", 212L -> "solo words here", // in-batch pair
         213L -> variantText(9)) : _*) // near-dup of batch1
 
-    var accumulated: DataFrame = null
-    Seq(batch0, batch1, batch2).zipWithIndex.foreach { case (batch, k) =>
-      val res = DeltaDedup.ingest(spark, dir, batch, cfg,
-        partnerTexts = Option(accumulated))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
-      // O(delta) evidence: only this batch was shingled+minhashed
-      assert(res.bandedDocs == batch.count(), s"batch $k banded too much")
+    /** Ingests the three batches into a fresh state dir; returns the dir and
+      * each batch's (classified, candidates, verified) rows. */
+    def ingestAll(): (String, Seq[(Seq[String], Seq[String], Seq[String])]) = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-deltadedup").toString
+      var accumulated: DataFrame = null
+      val out = Seq(batch0, batch1, batch2).zipWithIndex.map { case (batch, k) =>
+        val res = DeltaDedup.ingest(spark, dir, batch, cfg,
+          partnerTexts = Option(accumulated))
 
-      val expClassified = (if (accumulated == null)
-        DeltaDedup.exactClassify(batch, batch.limit(0))
-      else DeltaDedup.exactClassify(batch, accumulated)).collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      val gotClassified = res.classified.collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(gotClassified == expClassified, s"batch $k classify mismatch")
+        // O(delta) evidence: only this batch was shingled+minhashed
+        assert(res.bandedDocs == batch.count(), s"batch $k banded too much")
 
-      if (accumulated != null) {
-        def pairSet(df: DataFrame) = df.collect()
-          .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
-            math.round(r.getAs[Double]("jaccard") * 1e9))).toSet
-        val exp = pairSet(DeltaDedup.minhashPairsDelta(batch, accumulated, cfg))
-        assert(pairSet(res.verified.get) == exp, s"batch $k pair mismatch")
-        if (k == 2) { // sanity: the planted cross-batch near-dup was found
-          assert(exp.exists(p => p._1 == 9L && p._2 == 213L))
-          // and the exact-dup classification crossed the batch boundary
-          assert(gotClassified.contains(210L -> "corpus"))
-          assert(gotClassified.contains(212L -> "batch"))
+        val expClassified = (if (accumulated == null)
+          DeltaDedup.exactClassify(batch, batch.limit(0))
+        else DeltaDedup.exactClassify(batch, accumulated)).collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSet
+        val gotClassified = res.classified.collect()
+          .map(r => (r.getLong(0), r.getString(1))).toSet
+        assert(gotClassified == expClassified, s"batch $k classify mismatch")
+
+        if (accumulated != null) {
+          def pairSet(df: DataFrame) = df.collect()
+            .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
+              math.round(r.getAs[Double]("jaccard") * 1e9))).toSet
+          val exp = pairSet(DeltaDedup.minhashPairsDelta(batch, accumulated, cfg))
+          assert(pairSet(res.verified.get) == exp, s"batch $k pair mismatch")
+          if (k == 2) { // sanity: the planted cross-batch near-dup was found
+            assert(exp.exists(p => p._1 == 9L && p._2 == 213L))
+            // and the exact-dup classification crossed the batch boundary
+            assert(gotClassified.contains(210L -> "corpus"))
+            assert(gotClassified.contains(212L -> "batch"))
+          }
         }
+        accumulated =
+          if (accumulated == null) batch else accumulated.unionByName(batch)
+        accumulated = accumulated.localCheckpoint(true)
+        (rows(res.classified), rows(res.candidates), res.verified.map(rows).getOrElse(Nil))
       }
-      accumulated =
-        if (accumulated == null) batch else accumulated.unionByName(batch)
-      accumulated = accumulated.localCheckpoint(true)
+      (dir, out)
     }
+
+    val (dir, auto) = ingestAll()
+    // distributed mode (the over-cap bucket set anti-joined unbroadcast):
+    // the same rows for every batch
+    assert(TestSpark.distributed(ingestAll())._2 == auto)
 
     // a config change must refuse the state dir rather than mix signatures
     val other = Dedup.MinHashConfig(numHashes = 16, bands = 4)

@@ -52,9 +52,8 @@ class QualityClassifierSpec extends AnyFunSuite {
     }.toMap
   }
 
-  private def run(k: Double = 1.0, maxBroadcastRows: Long = 50000000L)
-      : Map[Long, (Long, Float, Boolean)] =
-    QualityClassifier.nbScore(docs, positive, negative, k, maxBroadcastRows)
+  private def run(k: Double = 1.0): Map[Long, (Long, Float, Boolean)] =
+    QualityClassifier.nbScore(docs, positive, negative, k)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getFloat(2),
         r.getBoolean(3)))).toMap
@@ -79,7 +78,7 @@ class QualityClassifierSpec extends AnyFunSuite {
   }
 
   test("keyed-join path (broadcast gate off) matches the default") {
-    assert(run(maxBroadcastRows = 0L) == run())
+    assert(TestSpark.distributed(run()) == run())
   }
 
   test("config guard throws") {
